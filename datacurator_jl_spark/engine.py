@@ -43,14 +43,31 @@ hash aggregate over the already-computed tag columns.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datacurator_jl_spark.recipe import RecipeSpec, Rule
+from datacurator_jl_spark.functions.arrow_stats import token_stats_arrow
+from datacurator_jl_spark.functions.classifier import linear_score
+from datacurator_jl_spark.functions.compress import compression_ratio_arrow
+from datacurator_jl_spark.functions.rep_stats import rep_stats_arrow
+from datacurator_jl_spark.operators import (
+    boilerplate,
+    dataframe_ops,
+    decontam,
+    dedup,
+    paragraph_dedup,
+    sampling,
+    span_dedup,
+)
+from datacurator_jl_spark.recipe import RecipeError, RecipeSpec, Rule
 from datacurator_jl_spark.registry import (
+    CLASSIFIER_CONDITIONS,
+    COMPRESSION_CONDITIONS,
+    REPSTATS_CONDITIONS,
+    ROWCOUNT_CONDITIONS,
     ActionSpec,
     RuleContext,
     compile_action,
@@ -58,7 +75,6 @@ from datacurator_jl_spark.registry import (
     compile_metric,
 )
 
-WORDS_COL = "_dc_words"
 STATS_COL = "_dc_stats"
 REP_COL = "_dc_rep"
 CLS_COL = "_dc_cls"
@@ -71,6 +87,10 @@ SCRUBBED_COL = "scrubbed_text"
 _CNT = "_dc_cnt_"
 _LST = "_dc_lst_"
 DEFAULT_RULE_ID = "default_keep"
+# the pre-passes' internal removed-line/span count column: select(*cols)
+# drops it, so a corpus that already has an n_removed column must not
+# trip the operators' collision guard
+_NREMOVED = "_dc_nremoved"
 
 
 @dataclass
@@ -344,27 +364,205 @@ class CurationResult:
         return bool(self.df.filter(F.col(QUIT_COL)).limit(1).count() > 0)
 
 
+def _checkpoint(df: DataFrame, policy: str) -> DataFrame:
+    """Materialize a pre-pass output once — the quit gate, counters, file
+    lists and the final write each execute the plan, and the pass's job
+    must not run per action — under the recipe's ``dedup_materialize``
+    policy. ``"local"`` stays lazy (the next action materializes it);
+    ``"reliable"`` or a path goes through ``dedup._materialize``, since a
+    localCheckpoint there would silently reintroduce the executor-loss
+    failure mode the policy exists to prevent."""
+    if policy == "local":
+        return df.localCheckpoint(eager=False)
+    return dedup._materialize(df, policy)
+
+
+@dataclass(frozen=True)
+class PrePass:
+    """One ``[global]`` pre-pass. ``Pipeline.apply`` runs every enabled
+    entry of ``PREPASSES``, in order, through the same steps: check
+    columns, reject streams, run, ``select(*cols)``, checkpoint, then
+    record id validation."""
+
+    key: str  # the [global] key; also names the pass in errors
+    enabled: Callable[[RecipeSpec], bool]
+    cols: Callable[[RecipeSpec], list[str]]  # input columns the pass needs
+    run: Callable[[DataFrame, RecipeSpec, bool], DataFrame]  # (df, spec, validate_ids)
+    batch_only: str | None  # why a stream is rejected; None = streaming-safe
+    # the run probed id uniqueness and kept rows' ids, so later passes
+    # skip their own probe
+    validates_ids: Callable[[RecipeSpec], bool] = lambda spec: False
+    checkpoint: bool = True  # under the recipe's dedup_materialize policy
+
+
+def _name_text(spec: RecipeSpec) -> list[str]:
+    return [spec.name_col, spec.text_col]
+
+
+def _dedup(df: DataFrame, spec: RecipeSpec, validate_ids: bool) -> DataFrame:
+    if spec.dedup == "near":
+        return dedup.drop_near_dupes(
+            df, spec.name_col, spec.text_col, materialize=spec.dedup_materialize
+        )
+    # share the upstream ONCE across the operator's three consumers
+    # (id-validation probe, winners aggregate, semi-join probe side):
+    # un-checkpointed pre-passes like blocklist/keep_latest would
+    # otherwise re-run per branch. Lazy under "local": the validation
+    # probe is the first action and materializes it.
+    df = _checkpoint(df, spec.dedup_materialize)
+    if spec.dedup_base_hashes:
+        # ingest mode: dedup within the batch AND against the persisted
+        # corpus hash table (base side semi-pruned on the batch's hashes
+        # — per-run cost tracks the batch, the standing table is
+        # scanned, not shuffled)
+        base_h = df.sparkSession.read.parquet(spec.dedup_base_hashes)
+        return dedup.incremental_exact_survivors(
+            df, base_h, spec.name_col, spec.text_col, validate_ids=validate_ids
+        )
+    # id uniqueness is load-bearing for the semi-join-on-id plan
+    return dedup.drop_exact_dupes(
+        df, spec.name_col, spec.text_col, validate_ids=validate_ids
+    )
+
+
+def _mixture(df: DataFrame, spec: RecipeSpec, validate_ids: bool) -> DataFrame:
+    if spec.mixture_weight_col is not None:
+        return sampling.mixture_token_sample(
+            df, spec.mixture_col, spec.name_col, spec.mixture_weight_col,
+            spec.mixture, spec.mixture_total,
+        )
+    return sampling.mixture_sample(
+        df, spec.mixture_col, spec.name_col, spec.mixture, spec.mixture_total
+    )
+
+
+# The pinned pre-pass order (CLAUDE.md); each entry says why it sits
+# where it does. Operators are looked up through their modules at call
+# time, so a patched module attribute (e.g. a tracing wrapper) is seen.
+PREPASSES: tuple[PrePass, ...] = (
+    # the cheapest stage — a plain pushdown-friendly filter on the name
+    # column, so blocked domains never pay for any later stage.
+    # Streaming-safe (no global state).
+    PrePass("blocklist", lambda s: bool(s.blocklist), lambda s: [s.name_col],
+            lambda df, s, v: dataframe_ops.blocklist_filter(df, s.name_col, s.blocklist),
+            batch_only=None, checkpoint=False),
+    # collapse multiple crawls of the same name/url to the newest BEFORE
+    # any content pass — dedup would otherwise pick its own (min-id)
+    # representative, and boilerplate/paragraph frequencies would
+    # double-count stale versions. After blocklist (cheapest-first:
+    # blocked rows never enter the argmax shuffle). One
+    # map-side-combinable max(struct) aggregate.
+    PrePass("keep_latest", lambda s: bool(s.keep_latest),
+            lambda s: [s.name_col, *s.keep_latest],
+            lambda df, s, v: dataframe_ops.latest_version(df, [s.name_col], *s.keep_latest),
+            batch_only="the newest version per name is a global aggregate; for streams "
+            "dedup versions downstream or via the signature-table flow",
+            checkpoint=False),
+    # strip corpus-wide repeated lines BEFORE dedup and the rules —
+    # shared chrome inflates near-dup similarity and quality scores
+    PrePass("remove_boilerplate", lambda s: bool(s.remove_boilerplate), _name_text,
+            lambda df, s, v: boilerplate.remove_boilerplate_lines(
+                df, s.name_col, s.text_col, min_docs=s.remove_boilerplate,
+                count_col=_NREMOVED, validate_ids=v),
+            batch_only="the line frequency is a global corpus aggregate",
+            validates_ids=lambda s: True),
+    # C4-style: after boilerplate (chrome lines removed first so they
+    # don't masquerade as content paragraphs), before doc-level dedup
+    # (paragraph-stripped texts may collapse into exact doc dupes; a
+    # doc-level exact dup is also a paragraph dup, so this pass nulls
+    # the losers first)
+    PrePass("paragraph_dedup", lambda s: s.paragraph_dedup, _name_text,
+            lambda df, s, v: paragraph_dedup.dedup_paragraphs(
+                df, s.name_col, s.text_col, count_col=_NREMOVED, validate_ids=v),
+            batch_only="the winner per paragraph is a global corpus aggregate",
+            validates_ids=lambda s: True),
+    # ExactSubstr-style: after paragraph dedup (exact paragraph repeats
+    # are cheaper to kill whole), before doc-level dedup (span-stripped
+    # texts may collapse into exact dupes)
+    PrePass("remove_duplicated_spans", lambda s: bool(s.remove_duplicated_spans), _name_text,
+            lambda df, s, v: span_dedup.remove_duplicated_spans(
+                df, s.name_col, s.text_col, n=s.remove_duplicated_spans, count_col=_NREMOVED,
+                materialize=s.dedup_materialize, validate_ids=v),
+            batch_only="window frequency is a global corpus aggregate",
+            validates_ids=lambda s: True),
+    # BEFORE the rule chain so quality heuristics never pay for
+    # duplicate bytes — the standard curation-pipeline stage order.
+    # drop_near_dupes runs no id probe; the exact operators do.
+    PrePass("dedup", lambda s: bool(s.dedup), _name_text, _dedup,
+            batch_only="streaming: use streaming.streaming_dedup",
+            validates_ids=lambda s: s.dedup == "exact"),
+    # Lee et al. 2022 dup-fraction cap: AFTER dedup (whole-doc dups
+    # already removed — this catches the PARTIAL duplication they leave
+    # behind), BEFORE domain_cap (cap the cleaned corpus)
+    PrePass("max_dup_ngram_fraction", lambda s: s.max_dup_ngram_fraction is not None,
+            _name_text,
+            lambda df, s, v: decontam.dup_ngram_stats(
+                df, s.name_col, s.text_col, n=s.dup_ngram_n,
+                materialize=s.dedup_materialize, validate_ids=v,
+            ).filter(F.col("dup_fraction") <= s.max_dup_ngram_fraction),
+            batch_only="gram doc frequency is a global corpus aggregate",
+            validates_ids=lambda s: True),
+    # AFTER dedup (cap the deduplicated corpus, not raw dup counts) — at
+    # most N docs per domain by portable hash order
+    PrePass("domain_cap", lambda s: bool(s.domain_cap),
+            lambda s: [s.domain_cap_col, s.name_col],
+            lambda df, s, v: sampling.group_cap_sample(
+                df, s.domain_cap_col, s.name_col, cap=s.domain_cap),
+            batch_only="per-domain ranking needs the whole corpus; streaming: "
+            "use streaming.domain_quota_stream"),
+    # LAST — select the training mix from the fully-hygienic corpus
+    # (mixing before dedup/caps would let duplicates consume quota)
+    PrePass("mixture", lambda s: s.mixture is not None,
+            lambda s: [c for c in (s.mixture_col, s.name_col, s.mixture_weight_col) if c],
+            _mixture,
+            batch_only="target shares need the whole corpus; streaming: cap "
+            "per-source flow with streaming.domain_quota_stream"),
+)
+
+# Shared pre-projections over the text column: (column, the condition
+# pool that asks for it or None = always, factory). Each is projected
+# ONCE and every rule reads it. Catalyst keeps the projections separate
+# (CollapseProject refuses to inline a non-cheap alias referenced many
+# times), whole-stage codegen fuses them into one pass, and one no rule
+# references is column-pruned away entirely. Measured ~3x over
+# re-deriving inside each rule (conditional CASE branches get no
+# codegen subexpression elimination). _dc_stats is the Arrow twin of
+# the token-stats fold (functions/arrow_stats.py): the native HOF fold
+# is interpreted (CodegenFallback) and anti-scales on a shared heap, so
+# the JVM never splits the text. The scores are struct-wrapped like
+# _dc_stats: CollapseProject inlines a bare non-cheap double alias into
+# every reference (re-extracting the UDF once per use), but leaves
+# GetStructField reads on the pre-projection — one Arrow stage
+# regardless of rule count (pinned in test_plans).
+_SHARED_COLS: tuple[tuple[str, set[str] | None, Callable[[Column], Column]], ...] = (
+    (STATS_COL, None, token_stats_arrow),
+    (REP_COL, REPSTATS_CONDITIONS, rep_stats_arrow),
+    (CLS_COL, CLASSIFIER_CONDITIONS, lambda t: F.struct(linear_score(t).alias("score"))),
+    (COMP_COL, COMPRESSION_CONDITIONS,
+     lambda t: F.struct(compression_ratio_arrow(t).alias("ratio"))),
+)
+
+
 class Pipeline:
     """Compiled recipe. ``apply(df)`` adds decision/transform columns."""
 
-    def __init__(self, spec: RecipeSpec, arrow_stats: bool = True):
+    def __init__(self, spec: RecipeSpec):
         self.spec = spec
-        # Arrow-vectorized token stats (default) vs the pure-JVM fold;
-        # identical values (tested), different physical strategy.
-        self.arrow_stats = arrow_stats
 
     def _ctx(self, df: DataFrame, row_count: int | None = None) -> RuleContext:
+        def present(c: str) -> str | None:
+            return c if c in df.columns else None
+
         return RuleContext(
             name_col=self.spec.name_col,
             text_col=self.spec.text_col,
-            html_col=self.spec.html_col if (self.spec.html_col in df.columns) else None,
+            html_col=present(self.spec.html_col),
             available_cols=df.columns,
             spec=self.spec,
-            words_col=WORDS_COL if WORDS_COL in df.columns else None,
-            stats_col=STATS_COL if STATS_COL in df.columns else None,
-            rep_col=REP_COL if REP_COL in df.columns else None,
-            cls_col=CLS_COL if CLS_COL in df.columns else None,
-            comp_col=COMP_COL if COMP_COL in df.columns else None,
+            stats_col=present(STATS_COL),
+            rep_col=present(REP_COL),
+            cls_col=present(CLS_COL),
+            comp_col=present(COMP_COL),
             row_count=row_count,
         )
 
@@ -380,11 +578,6 @@ class Pipeline:
         exprs.extend(self.spec.common_conditions.values())
         return any(n in pool for e in exprs for n in names(e))
 
-    def _uses_rowcount_condition(self) -> bool:
-        from datacurator_jl_spark.registry import ROWCOUNT_CONDITIONS
-
-        return self._uses_condition_from(ROWCOUNT_CONDITIONS)
-
     def apply(self, df: DataFrame) -> CurationResult:
         spec = self.spec
         # row-count gate (has_n_rows family): ONE count, computed only when
@@ -396,394 +589,38 @@ class Pipeline:
         # execute the whole LSH job once for the gate and again for the
         # pipeline).
         row_count = None
-        if self._uses_rowcount_condition():
+        if self._uses_condition_from(ROWCOUNT_CONDITIONS):
             if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
                 raise RecipeError(
                     "row-count conditions (has_n_rows family) are batch-only: "
                     "an unbounded stream has no row count"
                 )
             row_count = df.count()
-        # [global] pre-passes fail BEFORE any data is processed when the
-        # column they are configured to run on is absent — a typo'd
-        # domain_cap_col passes eager recipe *type* validation, and a
-        # silent no-op here would ship an uncapped/unfiltered corpus
-        # (the fail-before-data recipe contract).
-        def _need(prepass: str, *cols_needed: str) -> None:
-            missing = [c for c in cols_needed if c not in df.columns]
-            if missing:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    f"[global] {prepass} is configured but column(s) "
-                    f"{missing} are absent from the input "
-                    f"(input has: {df.columns})"
-                )
-
-        # optional blocklist pre-pass ([global] blocklist = [...]): the
-        # cheapest stage — a plain pushdown-friendly filter on the name
-        # column, so blocked domains never pay for any later stage.
-        # Streaming-safe (no global state).
-        if spec.blocklist:
-            _need("blocklist", spec.name_col)
-            from datacurator_jl_spark.operators.dataframe_ops import (
-                blocklist_filter,
-            )
-
-            df = blocklist_filter(df, spec.name_col, spec.blocklist)
-        # optional latest-version pre-pass ([global] keep_latest =
-        # ["ts_col", "tiebreak_col"]): collapse multiple crawls of the
-        # same name/url to the newest BEFORE any content pass — dedup
-        # would otherwise pick its own (min-id) representative, and
-        # boilerplate/paragraph frequencies would double-count stale
-        # versions. After blocklist (cheapest-first: blocked rows never
-        # enter the argmax shuffle). One map-side-combinable max(struct)
-        # aggregate; original column order preserved.
-        if spec.keep_latest:
-            ts_col, tb_col = spec.keep_latest
-            _need("keep_latest", spec.name_col, ts_col, tb_col)
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    "keep_latest is batch-only (the newest version per "
-                    "name is a global aggregate); for streams dedup "
-                    "versions downstream or via the signature-table flow"
-                )
-            from datacurator_jl_spark.operators.dataframe_ops import (
-                latest_version,
-            )
-
-            cols = list(df.columns)
-            df = latest_version(df, [spec.name_col], ts_col, tb_col).select(
-                *cols
-            )
-        # optional boilerplate pre-pass ([global] remove_boilerplate = N):
-        # strip corpus-wide repeated lines BEFORE dedup and the rules —
-        # shared chrome inflates near-dup similarity and quality scores.
-        # Checkpointed like the dedup survivor set: the line-frequency
-        # aggregate must not re-run per downstream action.
         ids_validated = False  # run the duplicate-id probe at most once
-        if spec.remove_boilerplate:
-            _need("remove_boilerplate", spec.name_col, spec.text_col)
-            from datacurator_jl_spark.operators.boilerplate import (
-                remove_boilerplate_lines,
-            )
-
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
+        for p in (p for p in PREPASSES if p.enabled(spec)):
+            names = list(df.columns)
+            # fail BEFORE any data is processed when a configured pass's
+            # column is absent — a typo'd domain_cap_col passes eager
+            # recipe *type* validation, and a silent no-op here would
+            # ship an uncapped/unfiltered corpus
+            missing = [c for c in p.cols(spec) if c not in names]
+            if missing:
                 raise RecipeError(
-                    "remove_boilerplate is batch-only (the line frequency "
-                    "is a global corpus aggregate)"
+                    f"[global] {p.key} is configured but column(s) "
+                    f"{missing} are absent from the input (input has: {names})"
                 )
-            cols = df.columns
-            # internal count_col: the count is dropped by select(*cols),
-            # so a corpus that already has an n_removed column must not
-            # trip the operator's collision guard
-            df = remove_boilerplate_lines(
-                df, spec.name_col, spec.text_col,
-                min_docs=spec.remove_boilerplate,
-                count_col="_dc_nremoved",
-            ).select(*cols)
-            df = df.localCheckpoint(eager=False)
-            ids_validated = True  # probe ran; rows/ids preserved below
-        # optional C4-style paragraph dedup ([global] paragraph_dedup):
-        # after boilerplate (chrome lines removed first so they don't
-        # masquerade as content paragraphs), before doc-level dedup
-        # (paragraph-stripped texts may collapse into exact doc dupes)
-        if spec.paragraph_dedup:
-            _need("paragraph_dedup", spec.name_col, spec.text_col)
-            from datacurator_jl_spark.operators.paragraph_dedup import (
-                dedup_paragraphs,
-            )
-
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    "paragraph_dedup is batch-only (the winner per "
-                    "paragraph is a global corpus aggregate)"
-                )
-            cols = df.columns
-            # skip the probe when the boilerplate pass already validated
-            # the SAME id column (it preserves rows/ids)
-            df = dedup_paragraphs(
-                df, spec.name_col, spec.text_col,
-                count_col="_dc_nremoved",
-                validate_ids=not ids_validated,
-            ).select(*cols)
-            df = df.localCheckpoint(eager=False)
-            ids_validated = True
-        # optional ExactSubstr-style span removal ([global]
-        # remove_duplicated_spans = N): after paragraph dedup (exact
-        # paragraph repeats are cheaper to kill whole), before doc-level
-        # dedup (span-stripped texts may collapse into exact dupes)
-        if spec.remove_duplicated_spans:
-            _need("remove_duplicated_spans", spec.name_col, spec.text_col)
-            from datacurator_jl_spark.operators.span_dedup import (
-                remove_duplicated_spans,
-            )
-
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    "remove_duplicated_spans is batch-only (window "
-                    "frequency is a global corpus aggregate)"
-                )
-            cols = df.columns
-            df = remove_duplicated_spans(
-                df, spec.name_col, spec.text_col,
-                n=spec.remove_duplicated_spans,
-                count_col="_dc_nremoved",
-                materialize=spec.dedup_materialize,
-                validate_ids=not ids_validated,
-            ).select(*cols)
-            # survivor durability mirrors the dedup pass (see below)
-            if spec.dedup_materialize == "local":
-                df = df.localCheckpoint(eager=False)
-            else:
-                from datacurator_jl_spark.operators.dedup import _materialize
-
-                df = _materialize(df, spec.dedup_materialize)
-            ids_validated = True
-        # optional dedup pre-pass ([global] dedup = "exact"|"near"): run
-        # BEFORE the rule chain so quality heuristics never pay for
-        # duplicate bytes — the standard curation-pipeline stage order
-        if spec.dedup:
-            _need("dedup", spec.name_col, spec.text_col)
-            from datacurator_jl_spark.operators.dedup import (
-                drop_exact_dupes,
-                drop_near_dupes,
-            )
-
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    "dedup pre-pass is batch-only (streaming: use "
-                    "streaming.streaming_dedup)"
-                )
-            if spec.dedup == "exact":
-                # share the upstream ONCE across the operator's three
-                # consumers (id-validation probe, winners aggregate,
-                # semi-join probe side): un-checkpointed pre-passes like
-                # blocklist/keep_latest would otherwise re-run per
-                # branch. Lazy: the validation probe is the first action
-                # and materializes it; same per-pre-pass checkpoint
-                # policy as boilerplate/paragraph_dedup above.
-                df = df.localCheckpoint(eager=False)
-                # id uniqueness is load-bearing for the semi-join-on-id
-                # plan; skip the probe only when a prior pre-pass already
-                # validated this id column
-                if spec.dedup_base_hashes:
-                    # ingest mode: dedup within the batch AND against the
-                    # persisted corpus hash table (base side semi-pruned
-                    # on the batch's hashes — per-run cost tracks the
-                    # batch, the standing table is scanned, not shuffled)
-                    from datacurator_jl_spark.operators.dedup import (
-                        incremental_exact_survivors,
-                    )
-
-                    base_h = df.sparkSession.read.parquet(
-                        spec.dedup_base_hashes
-                    )
-                    df = incremental_exact_survivors(
-                        df, base_h, spec.name_col, spec.text_col,
-                        validate_ids=not ids_validated,
-                    )
-                else:
-                    df = drop_exact_dupes(
-                        df, spec.name_col, spec.text_col,
-                        validate_ids=not ids_validated,
-                    )
-                ids_validated = True
-                # materialize the survivor set once: the quit gate,
-                # counters, file lists and the final write each execute
-                # the plan — the dedup job must not run per action
-                df = df.localCheckpoint(eager=False)
-            else:
-                from datacurator_jl_spark.operators.dedup import _materialize
-
-                df = drop_near_dupes(
-                    df,
-                    spec.name_col,
-                    spec.text_col,
-                    materialize=spec.dedup_materialize,
-                )
-                # survivor set honors the SAME durability policy as the
-                # dedup intermediates: wrapping a 'reliable'/path run in
-                # a localCheckpoint would silently reintroduce the
-                # executor-loss failure mode the policy exists to prevent
-                if spec.dedup_materialize == "local":
-                    df = df.localCheckpoint(eager=False)
-                else:
-                    df = _materialize(df, spec.dedup_materialize)
-        # optional dup-fraction cap ([global] max_dup_ngram_fraction):
-        # AFTER dedup (whole-doc dups already removed — this catches the
-        # PARTIAL duplication they leave behind), BEFORE domain_cap (cap
-        # the cleaned corpus). Lee et al. 2022 dup-fraction signal.
-        if spec.max_dup_ngram_fraction is not None:
-            _need("max_dup_ngram_fraction", spec.name_col, spec.text_col)
-            from datacurator_jl_spark.operators.decontam import dup_ngram_stats
-
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    "max_dup_ngram_fraction is batch-only (gram doc "
-                    "frequency is a global corpus aggregate)"
-                )
-            cols = df.columns
-            df = (
-                dup_ngram_stats(
-                    df, spec.name_col, spec.text_col, n=spec.dup_ngram_n,
-                    materialize=spec.dedup_materialize,
-                    validate_ids=not ids_validated,
-                )
-                .filter(F.col("dup_fraction") <= spec.max_dup_ngram_fraction)
-                .select(*cols)
-            )
-            # survivor durability mirrors the dedup pass: wrapping a
-            # 'reliable'/path run in localCheckpoint would reintroduce
-            # the executor-loss failure mode the policy exists to prevent
-            if spec.dedup_materialize == "local":
-                df = df.localCheckpoint(eager=False)
-            else:
-                from datacurator_jl_spark.operators.dedup import _materialize
-
-                df = _materialize(df, spec.dedup_materialize)
-            ids_validated = True
-        # optional per-domain cap ([global] domain_cap = N): AFTER dedup
-        # (cap the deduplicated corpus, not raw dup counts) — at most N
-        # docs per domain by portable hash order
-        if spec.domain_cap:
-            _need("domain_cap", spec.domain_cap_col, spec.name_col)
-            from datacurator_jl_spark.operators.sampling import group_cap_sample
-
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    "domain_cap is batch-only (per-domain ranking needs "
-                    "the whole corpus; streaming: use "
-                    "streaming.domain_quota_stream)"
-                )
-            cols = df.columns
-            df = group_cap_sample(
-                df, spec.domain_cap_col, spec.name_col, cap=spec.domain_cap
-            ).select(*cols)
-            df = df.localCheckpoint(eager=False)
-        # optional data mixing ([global] mixture + mixture_total): LAST
-        # — select the training mix from the fully-hygienic corpus
-        # (mixing before dedup/caps would let duplicates consume quota)
-        if spec.mixture is not None:
-            _need("mixture", spec.mixture_col, spec.name_col)
-            from datacurator_jl_spark.operators.sampling import (
-                mixture_sample, mixture_token_sample,
-            )
-
-            if df.isStreaming:
-                from datacurator_jl_spark.recipe import RecipeError
-
-                raise RecipeError(
-                    "mixture is batch-only (target shares need the whole "
-                    "corpus; streaming: cap per-source flow with "
-                    "streaming.domain_quota_stream)"
-                )
-            cols = df.columns
-            if spec.mixture_weight_col is not None:
-                _need("mixture", spec.mixture_weight_col)
-                df = mixture_token_sample(
-                    df,
-                    spec.mixture_col,
-                    spec.name_col,
-                    spec.mixture_weight_col,
-                    spec.mixture,
-                    spec.mixture_total,
-                ).select(*cols)
-            else:
-                df = mixture_sample(
-                    df,
-                    spec.mixture_col,
-                    spec.name_col,
-                    spec.mixture,
-                    spec.mixture_total,
-                ).select(*cols)
-            df = df.localCheckpoint(eager=False)
-        # Pre-project the tokenization and token-stats fold ONCE: every
-        # word-based rule then reads these shared columns. Catalyst keeps
-        # the projections separate (CollapseProject refuses to inline a
-        # non-cheap alias referenced many times), whole-stage codegen
-        # fuses them into one pass, and if no rule references them they
-        # are column-pruned away entirely. Measured ~3x over re-deriving
-        # the split/stats inside each rule (conditional CASE branches get
-        # no codegen subexpression elimination).
-        from datacurator_jl_spark.functions import text as X
-
+            if p.batch_only and df.isStreaming:
+                raise RecipeError(f"{p.key} is batch-only ({p.batch_only})")
+            df = p.run(df, spec, not ids_validated).select(*names)
+            if p.checkpoint:
+                df = _checkpoint(df, spec.dedup_materialize)
+            ids_validated = ids_validated or p.validates_ids(spec)
         input_cols = list(df.columns)
         if spec.text_col in df.columns:
             tcol = F.col(spec.text_col)
-            if self.arrow_stats:
-                # Arrow path: the native HOF fold is interpreted
-                # (CodegenFallback) and anti-scales on a shared heap;
-                # the pandas/Arrow twin runs in per-core worker processes
-                # (functions/arrow_stats.py) and carries ALL word-derived
-                # stats (nw/nd/set counts), so the JVM never splits the
-                # text at all — no words array is materialized.
-                from datacurator_jl_spark.functions.arrow_stats import (
-                    token_stats_arrow,
-                )
-
-                df = df.withColumn(STATS_COL, token_stats_arrow(tcol))
-            else:
-                # JVM path: LOWERCASED words (split commutes with lower)
-                # shared by the stats fold and any array-needing rule
-                df = df.withColumn(WORDS_COL, X.words(F.lower(tcol)))
-                df = df.withColumn(STATS_COL, X.token_stats(tcol, F.col(WORDS_COL)))
-            # Repetition struct (functions/rep_stats.py): ONE extra Arrow
-            # pass, pre-projected only when a repetition rule exists —
-            # recipes that never mention repetition pay nothing.
-            from datacurator_jl_spark.registry import REPSTATS_CONDITIONS
-
-            if self._uses_condition_from(REPSTATS_CONDITIONS):
-                from datacurator_jl_spark.functions.rep_stats import (
-                    rep_stats_arrow,
-                )
-
-                df = df.withColumn(REP_COL, rep_stats_arrow(tcol))
-            # Classifier score (functions/classifier.py): pre-projected
-            # once iff a classifier rule exists — every scoring rule then
-            # reads ONE Arrow stage's column instead of re-running the
-            # UDF per condition/filter reference.
-            from datacurator_jl_spark.registry import CLASSIFIER_CONDITIONS
-
-            if self._uses_condition_from(CLASSIFIER_CONDITIONS):
-                from datacurator_jl_spark.functions.classifier import (
-                    linear_score,
-                )
-
-                # struct-wrapped like _dc_stats: CollapseProject inlines
-                # a bare non-cheap double alias into every reference
-                # (re-extracting the UDF once per use), but leaves
-                # GetStructField reads on the pre-projection — one Arrow
-                # stage regardless of rule count (pinned in test_plans)
-                df = df.withColumn(
-                    CLS_COL, F.struct(linear_score(tcol).alias("score"))
-                )
-            from datacurator_jl_spark.registry import COMPRESSION_CONDITIONS
-
-            if self._uses_condition_from(COMPRESSION_CONDITIONS):
-                from datacurator_jl_spark.functions.compress import (
-                    compression_ratio_arrow,
-                )
-
-                df = df.withColumn(
-                    COMP_COL,
-                    F.struct(compression_ratio_arrow(tcol).alias("ratio")),
-                )
+            for col, pool, make in _SHARED_COLS:
+                if pool is None or self._uses_condition_from(pool):
+                    df = df.withColumn(col, make(tcol))
         ctx = self._ctx(df, row_count=row_count)
         compiled_levels: dict[int, list[_CompiledRule]] = {
             lvl: [_compile_rule(r, ctx, spec.act_on_success) for r in rules]
@@ -857,6 +694,3 @@ class Pipeline:
 def compile_recipe(spec: RecipeSpec) -> Pipeline:
     return Pipeline(spec)
 
-
-def run_recipe(df: DataFrame, spec: RecipeSpec) -> CurationResult:
-    return Pipeline(spec).apply(df)

@@ -83,10 +83,11 @@ class RecipeSpec:
     # (min-id per identical text) | 'near' (LSH + connected components,
     # component-min representative)
     dedup: str | None = None
-    # materialization policy for the near-dedup intermediates (signature
-    # buckets, edge list, per-round labels): 'local' (executor-local
-    # checkpoint) | 'reliable' (Spark checkpoint dir) | a directory path
-    # (persisted parquet signature tables) — operators/dedup._materialize
+    # materialization policy for every checkpointed pre-pass output and
+    # the dedup-family intermediates (signature buckets, edge list,
+    # per-round labels): 'local' (executor-local checkpoint) | 'reliable'
+    # (Spark checkpoint dir) | a directory path (persisted parquet) —
+    # engine._checkpoint / operators/dedup._materialize
     dedup_materialize: str = "local"
     # optional INGEST mode for dedup = "exact": path to a persisted
     # exact_hash_table parquet (one text_hash per distinct page of the

@@ -38,10 +38,9 @@ class RuleContext:
     html_col: str | None = "html"
     available_cols: list[str] | None = None
     spec: RecipeSpec | None = None
-    # set by the engine to pre-projected shared columns so every
-    # word-based heuristic shares ONE tokenization / ONE token-stats fold
-    # per row instead of re-deriving them inside each rule
-    words_col: str | None = None
+    # set by the engine to the pre-projected shared token-stats struct so
+    # every word-based heuristic reads ONE Arrow pass per row instead of
+    # re-deriving the stats inside each rule
     stats_col: str | None = None
     # shared repetition-stats struct (functions/rep_stats.py), pre-
     # projected by the engine iff a repetition condition is used
@@ -62,10 +61,6 @@ class RuleContext:
     @property
     def text(self) -> Column:
         return F.col(self.text_col)
-
-    @property
-    def warr(self) -> Column | None:
-        return F.col(self.words_col) if self.words_col else None
 
     @property
     def stats(self) -> Column | None:
@@ -180,21 +175,21 @@ _cond("has_text", 0, 0)(
 _cond("min_length", 1, 1)(lambda ctx, n: F.length(ctx.text) >= int(n))
 _cond("max_length", 1, 1)(lambda ctx, n: F.length(ctx.text) <= int(n))
 _cond("min_words", 1, 1)(
-    lambda ctx, n: X.n_words(ctx.text, ctx.warr, ctx.stats) >= int(n)
+    lambda ctx, n: X.n_words(ctx.text, stats=ctx.stats) >= int(n)
 )
 _cond("max_words", 1, 1)(
-    lambda ctx, n: X.n_words(ctx.text, ctx.warr, ctx.stats) <= int(n)
+    lambda ctx, n: X.n_words(ctx.text, stats=ctx.stats) <= int(n)
 )
 _cond("word_count_between", 1, 1)(
-    lambda ctx, lohi: (X.n_words(ctx.text, ctx.warr, ctx.stats) > int(lohi[0]))
-    & (X.n_words(ctx.text, ctx.warr, ctx.stats) < int(lohi[1]))
+    lambda ctx, lohi: (X.n_words(ctx.text, stats=ctx.stats) > int(lohi[0]))
+    & (X.n_words(ctx.text, stats=ctx.stats) < int(lohi[1]))
 )
 _cond("mean_word_length_between", 1, 1)(
-    lambda ctx, lohi: (X.mean_word_length(ctx.text, ctx.warr, ctx.stats) > float(lohi[0]))
-    & (X.mean_word_length(ctx.text, ctx.warr, ctx.stats) < float(lohi[1]))
+    lambda ctx, lohi: (X.mean_word_length(ctx.text, stats=ctx.stats) > float(lohi[0]))
+    & (X.mean_word_length(ctx.text, stats=ctx.stats) < float(lohi[1]))
 )
 _cond("max_word_length_below", 1, 1)(
-    lambda ctx, n: X.max_word_length(ctx.text, ctx.warr) < int(n)
+    lambda ctx, n: X.max_word_length(ctx.text) < int(n)
 )
 _cond("symbol_ratio_below", 1, 1)(
     lambda ctx, r: X.symbol_ratio(ctx.text, ctx.stats) < float(r)
@@ -210,13 +205,13 @@ _cond("encoding_noise_below", 1, 1)(
     lambda ctx, r: X.encoding_noise_ratio(ctx.text) < float(r)
 )
 _cond("stopword_ratio_above", 1, 1)(
-    lambda ctx, r: X.stopword_ratio(ctx.text, ctx.warr, ctx.stats) > float(r)
+    lambda ctx, r: X.stopword_ratio(ctx.text, stats=ctx.stats) > float(r)
 )
 _cond("min_stopword_hits", 1, 1)(
     lambda ctx, n: X.stopword_hits(ctx.text, ctx.stats) >= int(n)
 )
 _cond("word_repetition_below", 1, 1)(
-    lambda ctx, r: X.distinct_word_ratio(ctx.text, ctx.warr, ctx.stats)
+    lambda ctx, r: X.distinct_word_ratio(ctx.text, stats=ctx.stats)
     > F.lit(1.0) - float(r)
 )
 _cond("line_repetition_below", 1, 1)(
@@ -293,16 +288,16 @@ _cond("terminal_punct_ratio_above", 1, 1)(
     lambda ctx, r: X.terminal_punct_line_ratio(ctx.text) > float(r)
 )
 _cond("lang_is", 1, 1)(
-    lambda ctx, code: X.lang_id(ctx.text, ctx.warr, ctx.stats) == code
+    lambda ctx, code: X.lang_id(ctx.text, stats=ctx.stats) == code
 )
 _cond("lang_confident", 1, 1)(
-    lambda ctx, k: X.lang_top_score(ctx.text, ctx.warr, ctx.stats) >= int(k)
+    lambda ctx, k: X.lang_top_score(ctx.text, stats=ctx.stats) >= int(k)
 )
 _cond("perplexity_below", 1, 1)(
-    lambda ctx, p: X.perplexity_proxy(ctx.text, ctx.warr, ctx.stats) < float(p)
+    lambda ctx, p: X.perplexity_proxy(ctx.text, stats=ctx.stats) < float(p)
 )
 _cond("quality_above", 1, 1)(
-    lambda ctx, q: X.quality_score(ctx.text, ctx.warr, ctx.stats) > float(q)
+    lambda ctx, q: X.quality_score(ctx.text, stats=ctx.stats) > float(q)
 )
 _cond("contains_pii", 0, 0)(lambda ctx: S.contains_pii(ctx.text))
 _cond("contains_toxicity", 0, 0)(lambda ctx: S.contains_toxicity(ctx.text))

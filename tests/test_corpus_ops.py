@@ -336,29 +336,92 @@ def test_decontaminate_collision_and_duplicate_ids_raise(spark):
     assert set(kept.columns) == {"id", "text", "hits"} and kept.count() == 0
 
 
-def test_prepass_missing_column_raises(spark):
+@pytest.mark.parametrize(
+    "extra",
+    [
+        {"blocklist": ["spam.example"], "name_col": "missing_name"},
+        {"keep_latest": ["no_ts", "doc_id"]},
+        {"remove_boilerplate": 3, "text_col": "missing_text"},
+        {"paragraph_dedup": True, "text_col": "missing_text"},
+        {"remove_duplicated_spans": 5, "text_col": "missing_text"},
+        {"dedup": "exact", "text_col": "missing_text"},
+        {"max_dup_ngram_fraction": 0.5, "text_col": "missing_text"},
+        {"domain_cap": 5, "domain_cap_col": "no_such_col"},
+        {"mixture": {"a": 1.0}, "mixture_total": 1, "mixture_col": "no_such_col"},
+        {"mixture": {"a": 1.0}, "mixture_total": 1, "mixture_col": "doc_id",
+         "mixture_weight_col": "no_such_col"},
+    ],
+    ids=[
+        "blocklist", "keep_latest", "remove_boilerplate", "paragraph_dedup",
+        "remove_duplicated_spans", "dedup", "max_dup_ngram_fraction",
+        "domain_cap", "mixture", "mixture_weight_col",
+    ],
+)
+def test_prepass_missing_column_raises(spark, extra):
     """ADVICE r3: a [global] pre-pass configured on an absent column must
     fail at apply() time, not silently no-op (fail-before-data)."""
     from datacurator_jl_spark.engine import Pipeline
     from datacurator_jl_spark.recipe import RecipeError, parse_recipe
 
     df = spark.createDataFrame([(1, "some text")], "doc_id long, text string")
-    for extra in (
-        {"domain_cap": 5, "domain_cap_col": "no_such_col"},
-        {"blocklist": ["spam.example"], "name_col": "missing_name",
-         "text_col": "text"},
-        {"remove_boilerplate": 3, "text_col": "missing_text"},
-        {"dedup": "exact", "text_col": "missing_text"},
-        {"paragraph_dedup": True, "text_col": "missing_text"},
-    ):
-        g = {"act_on_success": True, "name_col": "doc_id", "text_col": "text"}
-        g.update(extra)
-        spec = parse_recipe(
-            {"global": g,
-             "any": {"conditions": ["always"], "actions": ["keep"]}}
-        )
-        with pytest.raises(RecipeError, match="absent from the input"):
-            Pipeline(spec).apply(df)
+    g = {"act_on_success": True, "name_col": "doc_id", "text_col": "text"}
+    g.update(extra)
+    spec = parse_recipe(
+        {"global": g, "any": {"conditions": ["always"], "actions": ["keep"]}}
+    )
+    with pytest.raises(RecipeError, match="absent from the input"):
+        Pipeline(spec).apply(df)
+
+
+def test_near_dedup_leaves_id_probe_to_later_prepass(spark):
+    """drop_near_dupes runs no duplicate-id probe, so the dup-fraction
+    pass after it must still run its own: duplicate ids still raise."""
+    from datacurator_jl_spark.engine import Pipeline
+    from datacurator_jl_spark.recipe import parse_recipe
+
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (1, "one two three four five"),
+         (2, "red green blue cyan magenta")],
+        "doc_id long, text string",
+    )
+    spec = parse_recipe(
+        {"global": {"act_on_success": True, "name_col": "doc_id",
+                    "text_col": "text", "dedup": "near",
+                    "max_dup_ngram_fraction": 0.9},
+         "any": {"conditions": ["always"], "actions": ["keep"]}}
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        Pipeline(spec).apply(df).df.count()
+
+
+def test_checkpointing_prepasses_honor_dedup_materialize(spark, tmp_path):
+    """A path-valued dedup_materialize governs every checkpointing
+    pre-pass, not only the dedup family: each of the four passes below
+    persists its output under the directory."""
+    import glob
+    import os
+
+    from datacurator_jl_spark.engine import Pipeline
+    from datacurator_jl_spark.recipe import parse_recipe
+
+    mat = str(tmp_path / "mat")
+    rows = [
+        (i, f"body {i} of the page\nshared footer line", "a" if i % 2 else "b")
+        for i in range(8)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    spec = parse_recipe(
+        {"global": {"act_on_success": True, "name_col": "doc_id",
+                    "text_col": "text", "remove_boilerplate": 3,
+                    "paragraph_dedup": True, "domain_cap": 3,
+                    "mixture": {"a": 0.5, "b": 0.5}, "mixture_total": 4,
+                    "dedup_materialize": mat},
+         "any": {"conditions": ["always"], "actions": ["keep"]}}
+    )
+    out = Pipeline(spec).apply(df).df
+    assert out.count() == 4
+    assert "shared footer line" not in out.first()["scrubbed_text"]
+    assert len(glob.glob(os.path.join(mat, "dc-mat-*"))) >= 4
 
 
 def test_dup_ngram_stats_semantics(spark):

@@ -240,3 +240,22 @@ def test_extract_text_from_html_backfill(spark):
     assert got["u1"] == "Hello & world"
     assert got["u2"] == "already have text"
     assert got["u3"] is None  # nothing to extract from
+
+
+def test_prepass_order_is_pinned():
+    """The [global] pre-pass order is the CLAUDE.md invariant: mixture
+    LAST, keep_latest before any content pass, paragraph dedup before
+    doc-level dedup."""
+    from datacurator_jl_spark.engine import PREPASSES
+
+    assert [p.key for p in PREPASSES] == [
+        "blocklist",
+        "keep_latest",
+        "remove_boilerplate",
+        "paragraph_dedup",
+        "remove_duplicated_spans",
+        "dedup",
+        "max_dup_ngram_fraction",
+        "domain_cap",
+        "mixture",
+    ]

@@ -122,9 +122,8 @@ def test_domain_quota_stateful_operator(spark, docs_dir):
 
 def test_round3_conditions_stream_matches_batch(spark, tmp_path_factory):
     """blocklist pre-pass (streaming-safe) + classifier/name-list
-    conditions over readStream produce the batch path's labels; the
-    batch-only pre-passes reject streams with guidance."""
-    from datacurator_jl_spark.recipe import RecipeError, parse_recipe
+    conditions over readStream produce the batch path's labels."""
+    from datacurator_jl_spark.recipe import parse_recipe
 
     path = str(tmp_path_factory.mktemp("r3s") / "docs")
     rows = [
@@ -164,22 +163,43 @@ def test_round3_conditions_stream_matches_batch(spark, tmp_path_factory):
         .collect()
     }
     assert got == exp and "u-blocked" not in got and len(got) == 3
-    # batch-only pre-passes reject streams with a typed error
-    for g in (
+
+
+@pytest.mark.parametrize(
+    "g",
+    [
+        {"keep_latest": ["warc_ts", "url"]},
+        {"remove_boilerplate": 3},
         {"paragraph_dedup": True},
-        {"domain_cap": 2, "domain_cap_col": "url"},
+        {"remove_duplicated_spans": 5},
         {"dedup": "exact"},
-    ):
-        s2 = parse_recipe(
-            {
-                "global": {"act_on_success": True, **g},
-                "any": {"conditions": ["always"], "actions": ["keep"]},
-            }
-        )
-        with pytest.raises(RecipeError):
-            Pipeline(s2).apply(
-                spark.readStream.schema("url string, text string").parquet(path)
-            )
+        {"max_dup_ngram_fraction": 0.5},
+        {"domain_cap": 2, "domain_cap_col": "url"},
+        {"mixture": {"en": 1.0}, "mixture_total": 5, "mixture_col": "lang"},
+    ],
+    ids=[
+        "keep_latest", "remove_boilerplate", "paragraph_dedup",
+        "remove_duplicated_spans", "dedup", "max_dup_ngram_fraction",
+        "domain_cap", "mixture",
+    ],
+)
+def test_batch_only_prepass_rejects_stream(spark, docs_dir, g):
+    """Every batch-only [global] pre-pass (the first key of ``g``) rejects
+    a stream with a typed error naming the pass, before any micro-batch
+    runs."""
+    from datacurator_jl_spark.recipe import RecipeError, parse_recipe
+
+    spec = parse_recipe(
+        {
+            "global": {"act_on_success": True, **g},
+            "any": {"conditions": ["always"], "actions": ["keep"]},
+        }
+    )
+    stream = spark.readStream.schema(
+        "url string, warc_ts timestamp, html binary, text string, lang string"
+    ).parquet(docs_dir)
+    with pytest.raises(RecipeError, match=f"{next(iter(g))} is batch-only"):
+        Pipeline(spec).apply(stream)
 
 
 def test_incremental_dedup_stream(spark, tmp_path_factory):
