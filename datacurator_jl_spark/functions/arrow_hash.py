@@ -12,7 +12,7 @@ processes with C-backed pandas/numpy ops.
 Semantics are PINNED IDENTICAL to the native exprs in operators/dedup.py
 and the DuckDB oracles:
 
-- token list = ASCII ``\\S+`` over ``lower(text)`` (functions/text.words),
+- token list = ``functions/tokens.py`` over ``lower(text)``,
   de-duplicated;
 - minhash lane i of word w = first 8 md5 hex chars of ``w + '#i'`` as a
   64-bit int (the portable ``_h32`` contract);
@@ -30,17 +30,14 @@ from __future__ import annotations
 
 import hashlib
 import itertools
-import re
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pa_compute
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)  # pinned: text.words semantics
+from datacurator_jl_spark.functions.tokens import token_codes
 
 _CACHE_CAP = 4_000_000  # per-worker memory bound per (fn, config) cache
 
@@ -82,33 +79,12 @@ def _md5_prefix_int(data: bytes, nhex: int) -> int:
 def _distinct_token_codes(
     texts: pd.Series,
 ) -> tuple[np.ndarray, np.ndarray, list[str]]:
-    """(rows, codes, uniques): the distinct (row, token) pairs over
-    lower(text) ``\\S+`` tokens, as int arrays + the unique-token list.
-
-    Round-7 shape (guide §4.2, same pattern as arrow_stats): Arrow
-    ``ascii_split_whitespace`` + ``dictionary_encode`` replace the
-    per-row ``re.findall`` + object ``explode`` + string
-    ``drop_duplicates`` (~8x on the tokenize+code step). Arrow's
-    splitter emits EMPTY strings at leading/trailing-whitespace
-    boundaries — a real ``\\S+`` match can never be empty, so dropping
-    empties restores the exact match list (pinned by the arrow_stats
-    edge-case test; both kernels share the splitter semantics).
-    ``rows`` are batch POSITIONS 0..n-1; pair-distinctness via unique
+    """(rows, codes, uniques): the distinct (row, token) pairs of
+    ``token_codes`` over lower(text). Pair-distinctness via unique
     (row, code) keys — integer work, no string re-hash."""
-    low = texts.fillna("").str.lower()
-    toks = pa_compute.ascii_split_whitespace(pa.Array.from_pandas(low))
-    flat = pa_compute.list_flatten(toks)
-    lens = pa_compute.list_value_length(toks).to_numpy(zero_copy_only=False)
-    rows = np.repeat(np.arange(len(texts), dtype=np.int64), lens)
-    nonempty = np.asarray(pa_compute.not_equal(flat, ""))
-    if not nonempty.all():
-        flat = flat.filter(pa.array(nonempty))
-        rows = rows[nonempty]
-    if len(flat) == 0:
-        return rows[:0], rows[:0], []
-    enc = pa_compute.dictionary_encode(flat)
-    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    uniques = enc.dictionary.to_pylist()
+    rows, codes, uniques = token_codes(texts.str.lower())
+    if not uniques:
+        return rows, codes, uniques
     nu = len(uniques)
     pk = np.unique(rows * nu + codes)
     return pk // nu, pk % nu, uniques
@@ -168,32 +144,28 @@ def _simhash_batch(texts: pd.Series, bits: int) -> pd.Series:
 
 def _h32_wordset_batch(texts: pd.Series) -> pd.Series:
     _lru_evict(_H32_CACHE)
-    toks = texts.str.lower().str.findall(_TOKEN_RE)
+    rows, codes, uniques = token_codes(texts.str.lower())
     # touch the LRU once per batch-UNIQUE word (like the minhash path) —
-    # recency refresh per token OCCURRENCE would triple dict ops in the
-    # hottest loop; the per-row loop below reads a plain local dict
-    ex = toks.explode().dropna()
-    local: dict[str, int] = {}
-    for w in (pd.unique(ex) if not ex.empty else ()):  # noqa: B020
+    # recency refresh per token OCCURRENCE would triple dict ops
+    hs = np.empty(len(uniques), dtype=np.int64)
+    for ui, w in enumerate(uniques):
         h = _lru_get(_H32_CACHE, w)
         if h is None:
             h = _md5_prefix_int(w.encode("utf-8"), 8)
             _H32_CACHE[w] = h
-        local[w] = h
-
-    def row_set(ws):
-        if ws is None or (isinstance(ws, float) and pd.isna(ws)):
-            return None
-        seen = []
-        have = set()
-        for w in ws:
-            h = local[w]
-            if h not in have:
-                have.add(h)
-                seen.append(h)
-        return seen
-
-    return toks.map(row_set, na_action="ignore")
+        hs[ui] = h
+    # each row's distinct hashes in first-occurrence order: the first
+    # position of every (row, hash) pair (h < 2**32), re-sorted by position
+    h = hs[codes]
+    _, first = np.unique(rows << 32 | h, return_index=True)
+    first.sort()
+    starts = np.searchsorted(rows[first], np.arange(len(texts) + 1))
+    hl = h[first].tolist()
+    sets = [hl[a:b] for a, b in zip(starts[:-1], starts[1:])]
+    # null text -> null set; empty/whitespace-only text -> []
+    return pd.Series(sets, index=texts.index, dtype=object).where(
+        texts.notna(), None
+    )
 
 
 def minhash_struct_arrow(text: Column, k: int) -> Column:

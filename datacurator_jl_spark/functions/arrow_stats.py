@@ -9,14 +9,12 @@ process-parallel. This is the north-star's sanctioned pattern (batched
 pandas/Arrow stages), not per-row Python.
 
 Semantics are PINNED IDENTICAL to text.token_stats / the DuckDB oracle:
-token = whitespace(ASCII \\s)-split word, lowercased, PUNCT_STRIP chars
-deleted, exact set membership. tests/test_operators.py asserts
-arrow == native on the synthetic corpus.
+token = a ``functions/tokens.py`` token of the lowercased text,
+PUNCT_STRIP chars deleted, exact set membership. tests/test_operators.py
+asserts arrow == native on the synthetic corpus.
 """
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 import pandas as pd
@@ -34,6 +32,7 @@ from datacurator_jl_spark.functions.text import (
     STAT_SETS,
     STATS_FIELDS,
 )
+from datacurator_jl_spark.functions.tokens import token_codes
 
 
 def _re2_class_escape(ch: str) -> str:
@@ -59,8 +58,6 @@ _STATS_TYPE = T.StructType(
 _SETS = {name: frozenset(ws) for name, ws in STAT_SETS.items()}
 _SET_LIST = list(_SETS.items())  # fixed order = STAT_SETS order
 _TBL = str.maketrans("", "", PUNCT_STRIP)
-# ASCII flag: match Java regex \s semantics exactly
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 #: token -> bitmask of set memberships (bit j = membership of the
 #: normalized token in _SET_LIST[j]); Zipfian web text makes this
@@ -70,34 +67,25 @@ _MEMBER_CACHE: dict[str, int] = {}
 
 
 def _token_stats_batch(texts: pd.Series) -> pd.DataFrame:
-    """Round-7 shape (guide §4.2): Arrow-native tokenization +
-    dictionary encode over the batch's tokens, per-UNIQUE-token
-    normalization + set membership (cached across batches), and
-    C-speed ``bincount`` aggregations — replacing a per-row
-    ``re.findall`` + object ``explode`` + ``factorize`` (measured on
-    the 1M-doc corpus: tokenize+code 490 ms -> 61 ms per 20k-doc
-    batch) which itself replaced a ``groupby.nunique`` plus one
-    ``str.isin`` pass per stat set over every token occurrence.
-    Values are pinned identical: nw = token count, nd = distinct RAW
-    (lowercased) tokens, set counts = occurrences whose PUNCT_STRIP-
-    normalized form is a member.
-
-    Tokenizer parity (pinned by tests/test_whitespace_semantics +
-    the edge-case test): ``pc.ascii_split_whitespace`` splits on
-    exactly the 6 ASCII whitespace chars of ``re.ASCII \\S+`` and
-    collapses interior runs, but emits EMPTY strings at leading/
-    trailing boundaries (and [''] for an all-whitespace doc) — a real
-    ``\\S+`` match can never be empty, so dropping empty tokens
-    restores the exact match list. Lowercasing stays Python
-    ``str.lower`` (the pinned case semantics) — it is 9 ms of the
-    batch, not the cost center."""
+    """Round-7 shape (guide §4.2): ``tokens.token_codes`` over the
+    lowered batch, per-UNIQUE-token normalization + set membership
+    (cached across batches), and C-speed ``bincount`` aggregations —
+    replacing a per-row ``re.findall`` + object ``explode`` +
+    ``factorize`` (measured on the 1M-doc corpus: tokenize+code 490 ms
+    -> 61 ms per 20k-doc batch) which itself replaced a
+    ``groupby.nunique`` plus one ``str.isin`` pass per stat set over
+    every token occurrence. Values are pinned identical: nw = token
+    count, nd = distinct RAW (lowercased) tokens, set counts =
+    occurrences whose PUNCT_STRIP-normalized form is a member.
+    Lowercasing stays Python ``str.lower`` (the pinned case
+    semantics) — it is 9 ms of the batch, not the cost center."""
     n = len(texts)
     raw = texts.fillna("")
-    low = raw.str.lower()
     out = pd.DataFrame(index=texts.index, columns=list(STATS_FIELDS), data=0)
     # -- round-7 char/line stats over the RAW text (empty-string
     #    semantics for null; lowercasing can CHANGE length — e.g.
-    #    'İ'.lower() is two code points — so these never read ``low``).
+    #    'İ'.lower() is two code points — so these never read lowered
+    #    text).
     #    One RE2 class count replaces each JVM translate re-scan; the
     #    line-distinct count rides the same dictionary_encode + unique-
     #    pair trick as ``nd``. Computed before the token early-return:
@@ -121,24 +109,13 @@ def _token_stats_batch(texts: pd.Series) -> pd.DataFrame:
     lup = np.unique(lrows * luniq + lcodes)
     out["ndl"] = np.bincount(lup // luniq, minlength=n)
     # -- token stats over the LOWERED text
-    toks = pa_compute.ascii_split_whitespace(pa.Array.from_pandas(low))
-    flat = pa_compute.list_flatten(toks)
-    lens = pa_compute.list_value_length(toks).to_numpy(zero_copy_only=False)
-    rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-    nonempty = np.asarray(pa_compute.not_equal(flat, ""))
-    if not nonempty.all():
-        flat = flat.filter(pa.array(nonempty))
-        rows = rows[nonempty]
-    if len(flat) == 0:
+    rows, codes, uniques = token_codes(raw.str.lower())
+    if not uniques:
         return out.astype("int32")
     out["nw"] = np.bincount(rows, minlength=n)
-    enc = pa_compute.dictionary_encode(flat)
-    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    uniques = enc.dictionary.to_pylist()
     nuniq = len(uniques)
     # nd: distinct raw tokens per row = distinct (row, token-code) pairs
-    pairkey = rows.astype(np.int64) * nuniq + codes
-    up = np.unique(pairkey)
+    up = np.unique(rows * nuniq + codes)
     out["nd"] = np.bincount(up // nuniq, minlength=n)
     _lru_evict(_MEMBER_CACHE)
     masks = np.empty(nuniq, dtype=np.int64)

@@ -9,8 +9,8 @@ scoring, a broadcastable weight array, and a path-configured model seam
 stages (plans/stages.py:190-230).
 
 PINNED SEMANTICS (stand-in path, oracle-exact):
-- tokens = ASCII ``\\S+`` over ``lower(text)``, WITH multiplicity
-  (fastText averages token vectors; repeats count).
+- tokens = ``functions/tokens.py`` over ``lower(text)``, WITH
+  multiplicity (fastText averages token vectors; repeats count).
 - bucket(tok) = ``_h32(tok + '#<salt>') % n_buckets``.
 - stand-in weight ``w[b] = _h32('w' + str(b) + '#<salt>') % 2001 - 1000``
   — an INTEGER in [-1000, 1000]. Integer weights are the cross-engine
@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import re
 
 import numpy as np
 import pandas as pd
@@ -51,8 +50,7 @@ from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.arrow_hash import _lru_evict, _lru_get
 from datacurator_jl_spark.functions.text import words
-
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)  # pinned: text.words semantics
+from datacurator_jl_spark.functions.tokens import TOKEN_RE, token_codes
 
 # (n_buckets, salt) -> {token: int weight}, LRU-bounded like arrow_hash
 _W_CACHES: dict[tuple[int, str], dict[str, int]] = {}
@@ -74,7 +72,7 @@ def classifier_score_py(
     """Per-row Python oracle twin of the stand-in score."""
     if text is None:
         return None
-    toks = _TOKEN_RE.findall(text.lower())
+    toks = TOKEN_RE.findall(text.lower())
     if not toks:
         return None
     s = sum(standin_weight(t, n_buckets, salt) for t in toks)
@@ -101,13 +99,10 @@ def linear_score_arrow(
     @F.pandas_udf(T.DoubleType())
     def _score(texts: pd.Series) -> pd.Series:
         cache = _W_CACHES.setdefault((n_buckets, salt), {})
-        toks = texts.fillna("").str.lower().str.findall(_TOKEN_RE)
-        n = toks.str.len()
+        rows, codes, uniques = token_codes(texts.str.lower())
         out = pd.Series(np.nan, index=texts.index, dtype="float64")
-        ex = toks.explode().dropna()
-        if ex.empty:
+        if not uniques:
             return out
-        codes, uniques = pd.factorize(ex)
         if weights is None:
             uw = np.empty(len(uniques), dtype=np.int64)
             for ui, t in enumerate(uniques):
@@ -117,22 +112,23 @@ def linear_score_arrow(
                     cache[t] = v
                 uw[ui] = v
             _lru_evict(cache)
-            sums = (
-                pd.Series(uw[codes], index=ex.index).groupby(level=0).sum()
-            )
-            out[sums.index] = sums / (1000.0 * n[sums.index])
+            # integer weights: every partial sum is an exact integer far
+            # below 2**53, so the float64 bincount equals the int64 sum
+            n = np.bincount(rows, minlength=len(texts))
+            sums = np.bincount(rows, weights=uw[codes], minlength=len(texts))
+            has = n > 0
+            out[has] = sums[has] / (1000.0 * n[has])
         else:
             buckets = np.fromiter(
                 (_h32_py(f"{t}#{salt}") % n_buckets for t in uniques),
                 dtype=np.int64,
                 count=len(uniques),
             )
-            sums = (
-                pd.Series(weights[buckets][codes], index=ex.index)
-                .groupby(level=0)
-                .sum()
-            )
-            out[sums.index] = bias + sums / n[sums.index]
+            # float weights keep pandas' (compensated) groupby sum: a
+            # naive bincount sum would move the last bits of the score
+            grouped = pd.Series(weights[buckets][codes]).groupby(rows)
+            sums, n = grouped.sum(), grouped.size()
+            out.iloc[sums.index] = (bias + sums / n).to_numpy()
         # docs with zero tokens stay NaN -> null
         return out
 

@@ -13,8 +13,7 @@ PINNED SEMANTICS (all three implementations — this Arrow pass, the
 DuckDB oracle SQL in queries.d21, the per-row Python oracle in
 testing/oracle.py — are value-identical; tests enforce):
 
-- token = ASCII ``\\S+`` match over ``lower(text)`` (the repo-wide
-  pinned tokenization; see functions/text.words).
+- token = a ``functions/tokens.py`` match over ``lower(text)``.
 - word n-gram = n consecutive tokens; its char length = sum of token
   lengths + (n-1) (i.e. the length of the space-joined string).
 - ``top{n}`` (n in 2..4) = max over distinct n-grams occurring >= 2
@@ -43,13 +42,14 @@ single ``_dc_rep`` struct shared by every repetition rule.
 
 from __future__ import annotations
 
-import re
 from collections import Counter
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from datacurator_jl_spark.functions.tokens import TOKEN_RE
 
 TOP_NS = (2, 3, 4)
 DUP_NS = (5, 6, 7, 8, 9, 10)
@@ -67,9 +67,6 @@ _REP_TYPE = T.StructType(
     [T.StructField(name, T.DoubleType()) for name in REP_FIELDS]
 )
 
-# ASCII flag: match Java regex \s semantics exactly (repo-wide pin)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
-
 
 def rep_stats_doc(t: str | None) -> list[float]:
     """Per-document reference computation (REP_FIELDS order).
@@ -80,7 +77,7 @@ def rep_stats_doc(t: str | None) -> list[float]:
     if t is None:
         return [0.0] * len(REP_FIELDS)
     nc = len(t)
-    toks = _TOKEN_RE.findall(t.lower())
+    toks = TOKEN_RE.findall(t.lower())
     out: list[float] = []
     for n in TOP_NS:
         best = 0

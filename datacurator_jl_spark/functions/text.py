@@ -60,11 +60,12 @@ def n_chars(text: Column) -> Column:
 def words(text: Column) -> Column:
     r"""Whitespace tokenization: EXACTLY the ``\S+`` match list.
 
-    Pinned across all four implementations (this JVM expr, the Arrow twin's
-    ``re.findall(r"\S+")``, the Python oracle, DuckDB
-    ``regexp_extract_all(text, '\S+')``). NB ``F.trim`` strips only the
-    space character — it is NOT whitespace-trim and must never be used for
-    token/has-text semantics (round-1 fuzz divergence on "\n").
+    Pinned across all four implementations (this JVM expr, the Python
+    kernels' one definition in ``functions/tokens.py``, the Python
+    oracle, DuckDB ``regexp_extract_all(text, '\S+')``). NB ``F.trim``
+    strips only the space character — it is NOT whitespace-trim and must
+    never be used for token/has-text semantics (round-1 fuzz divergence
+    on "\n").
 
     Implementation: Java ``split('\s+')`` never yields interior or
     trailing empty tokens (runs are consumed; trailing empties stripped),

@@ -30,19 +30,15 @@ the pipeline.
 from __future__ import annotations
 
 import os
-import re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.text import token_count as _native_token_count
-
-# pinned repo-wide ASCII \S+ word split (CLAUDE.md invariant) — the
-# fixture tokenizer segments within these words, like a real BPE's
-# pre-tokenizer does
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
+from datacurator_jl_spark.functions.tokens import token_codes
 
 # per-python-worker tokenizer cache: spec -> loaded counter
 _WORKER_TOKENIZERS: dict[str, object] = {}
@@ -51,9 +47,10 @@ _WORKER_TOKENIZERS: dict[str, object] = {}
 class JsonVocabTokenizer:
     """Greedy longest-match piece counter over a JSON vocab fixture.
 
-    Format: ``{"vocab": ["piece", ...]}``. Each ASCII-``\\S+`` word is
-    consumed left-to-right by the longest vocab piece that prefixes the
-    remainder (case-sensitive), falling back to a single character —
+    Format: ``{"vocab": ["piece", ...]}``. Each ``functions/tokens.py``
+    word (a real BPE's pre-tokenizer split) is consumed left-to-right
+    by the longest vocab piece that prefixes the remainder
+    (case-sensitive), falling back to a single character —
     the classic WordPiece/BPE segmentation shape, deterministic and
     dependency-free, so the Arrow plumbing and the budget arithmetic
     are testable without tiktoken/HF in the container.
@@ -91,11 +88,12 @@ class JsonVocabTokenizer:
         return n
 
     def count_batch(self, texts: pd.Series) -> pd.Series:
-        toks = texts.str.findall(_TOKEN_RE)
-        return toks.map(
-            lambda ws: sum(self._count_word(w) for w in ws),
-            na_action="ignore",
-        ).astype("Int64")  # null text -> null count (matches the native expr)
+        rows, codes, uniques = token_codes(texts)
+        pieces = np.array([self._count_word(w) for w in uniques], dtype=np.int64)
+        # integer piece counts: exact in bincount's float64 sums
+        counts = np.bincount(rows, weights=pieces[codes], minlength=len(texts))
+        out = pd.Series(counts.astype(np.int64), index=texts.index, dtype="Int64")
+        return out.mask(texts.isna())  # null text -> null count, as the native expr
 
 
 class TiktokenCounter:  # pragma: no cover - tiktoken not in this container

@@ -9,7 +9,7 @@ microscopy files); this belongs to the beyond-reference LLM-pipeline
 tier (SURVEY.md §6), next to dedup and the repetition filters.
 
 PINNED SEMANTICS:
-- token = ASCII ``\\S+`` match over ``lower(text)`` (repo-wide pin);
+- token = a ``functions/tokens.py`` match over ``lower(text)``;
   n-gram = n consecutive tokens joined by a single space.
 - hits = number of DISTINCT n-grams of the document that occur anywhere
   in the benchmark set; contaminated = hits > 0.
@@ -29,15 +29,12 @@ the broadcast set.
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# ASCII flag: match Java regex \s semantics exactly (repo-wide pin)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
+from datacurator_jl_spark.functions.tokens import TOKEN_RE
 
 
 def word_ngrams(text: Column, n: int) -> Column:
@@ -75,7 +72,7 @@ def word_ngrams_arrow(text: Column, n: int, distinct: bool = False) -> Column:
             if not isinstance(t, str):
                 out.append([])
                 continue
-            toks = _TOKEN_RE.findall(t.lower())
+            toks = TOKEN_RE.findall(t.lower())
             if len(toks) < n:
                 out.append([])
                 continue

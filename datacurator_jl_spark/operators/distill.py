@@ -17,8 +17,8 @@ learned criterion; beyond-reference training-data tier (SURVEY.md §6).
 PINNED SEMANTICS (Spark loop == generated DuckDB twin == the tests'
 per-row Python mirror — the dsir/e09 integer-determinism posture):
 
-- tokens = ASCII ``\\S+`` over ``lower(text)`` WITH multiplicity
-  (repo-wide pin; exactly the classifier's token stream); feature
+- tokens = ``functions/tokens.py`` over ``lower(text)`` WITH
+  multiplicity (exactly the classifier's token stream); feature
   bucket(tok) = ``_h32(tok + '#' + salt) % n_buckets`` — BYTE-IDENTICAL
   to ``classifier.standin_weight``'s bucket, so trained weights index
   the same table the scorer reads.
@@ -74,12 +74,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.classifier import _h32_py
+from datacurator_jl_spark.functions.tokens import TOKEN_RE, token_codes
 from datacurator_jl_spark.operators.dedup import (
     _materialize,
     _materialize_spread,
     _round_away,
 )
-from datacurator_jl_spark.operators.dsir import _TOKEN_RE
 
 
 def _doc_buckets(text, salt: str, n_buckets: int) -> Counter:
@@ -89,7 +89,7 @@ def _doc_buckets(text, salt: str, n_buckets: int) -> Counter:
         return Counter()
     return Counter(
         _h32_py(f"{t}#{salt}") % n_buckets
-        for t in _TOKEN_RE.findall(text.lower())
+        for t in TOKEN_RE.findall(text.lower())
     )
 
 
@@ -106,7 +106,7 @@ def unigram_buckets_arrow(
     ONE Arrow pass, counts collapsed per doc inside the batch (the dsir
     bigram builder's unigram twin, classifier bucket function).
 
-    Round-7 kernel (guide §4.2): factorize the batch's tokens once,
+    Round-7 kernel (guide §4.2): code the batch's tokens once,
     md5-bucket per UNIQUE token (cached across batches), count per
     (row, bucket) with one ``np.unique`` — replacing a per-doc Python
     Counter that re-hashed every token OCCURRENCE. Values identical
@@ -117,29 +117,19 @@ def unigram_buckets_arrow(
     def batch(texts: pd.Series) -> pd.Series:
         import numpy as np
 
-        from datacurator_jl_spark.operators.dsir import _TOKEN_RE as TR
-
         cache = _B_CACHES.setdefault((n_buckets, salt), {})
-        n = len(texts)
-        toks = texts.fillna("").str.lower().str.findall(TR)
-        ex = toks.explode().dropna()
-        out_lists: list = [[] for _ in range(n)]
-        if not ex.empty:
-            rows = texts.index.get_indexer(ex.index)
-            codes, uniques = pd.factorize(ex.to_numpy())
-            bks = np.empty(len(uniques), dtype=np.int64)
-            for i, u in enumerate(uniques):
-                b = cache.get(u)
-                if b is None:
-                    b = _h32_py(f"{u}#{salt}") % n_buckets
-                    cache[u] = b
-                bks[i] = b
-            key = rows.astype(np.int64) * n_buckets + bks[codes]
-            uk, cnt = np.unique(key, return_counts=True)
-            for k, c in zip(uk.tolist(), cnt.tolist()):
-                out_lists[k // n_buckets].append(
-                    {"b": k % n_buckets, "c": c}
-                )
+        rows, codes, uniques = token_codes(texts.str.lower())
+        out_lists: list = [[] for _ in range(len(texts))]
+        bks = np.empty(len(uniques), dtype=np.int64)
+        for i, u in enumerate(uniques):
+            b = cache.get(u)
+            if b is None:
+                b = _h32_py(f"{u}#{salt}") % n_buckets
+                cache[u] = b
+            bks[i] = b
+        uk, cnt = np.unique(rows * n_buckets + bks[codes], return_counts=True)
+        for k, c in zip(uk.tolist(), cnt.tolist()):
+            out_lists[k // n_buckets].append({"b": k % n_buckets, "c": c})
         return pd.Series(out_lists, index=texts.index)
 
     schema = T.ArrayType(

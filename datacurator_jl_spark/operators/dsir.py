@@ -18,7 +18,7 @@ corpus-level learned criterion; beyond-reference tier (SURVEY.md §6).
 PINNED SEMANTICS (shared by the Arrow builder, the DuckDB twin
 generator ``dsir_score_sql``, and the tests' per-row Python mirror):
 
-- token = ASCII ``\\S+`` match over ``lower(text)`` (repo-wide pin);
+- token = a ``functions/tokens.py`` match over ``lower(text)``;
   feature = consecutive token bigram "w1 w2"; a doc with < 2 tokens
   (incl. null text) has NO features and scores NULL.
 - bucket(g) = first 8 md5 hex chars of ``g + '#' + salt`` as a 64-bit
@@ -51,7 +51,6 @@ function, no driver collect.
 from __future__ import annotations
 
 import hashlib
-import re
 from collections import Counter
 
 import pandas as pd
@@ -59,10 +58,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.tokens import TOKEN_RE
 from datacurator_jl_spark.operators.dedup import _materialize
 
-# ASCII flag: match Java regex \s semantics exactly (repo-wide pin)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 _BUCKET_CACHE: dict[str, int] = {}
 
@@ -89,7 +87,7 @@ def _bucket(gram: str, salt: str, n_buckets: int) -> int:
 def _doc_buckets(text, salt: str, n_buckets: int) -> Counter:
     if not isinstance(text, str):
         return Counter()
-    toks = _TOKEN_RE.findall(text.lower())
+    toks = TOKEN_RE.findall(text.lower())
     return Counter(
         _bucket(toks[i] + " " + toks[i + 1], salt, n_buckets)
         for i in range(len(toks) - 1)

@@ -13,7 +13,7 @@ remains the production path when a real model file exists.
 PINNED SEMANTICS (Spark == generated DuckDB twin == the tests' per-row
 Python mirror — the dsir integer-determinism posture):
 
-- tokens = ASCII ``\\S+`` over ``lower(text)`` (repo-wide pin); events =
+- tokens = ``functions/tokens.py`` over ``lower(text)``; events =
   consecutive token bigrams; a doc with < 2 tokens (incl. null text)
   has no events and scores NULL.
 - buckets: ``b2 = bucket("w1 w2")`` and context ``b1 = bucket("w1")``,
@@ -54,15 +54,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.tokens import TOKEN_RE
 from datacurator_jl_spark.operators.dedup import _materialize
-from datacurator_jl_spark.operators.dsir import _TOKEN_RE, _bucket
+from datacurator_jl_spark.operators.dsir import _bucket
 
 
 def _doc_events(text, salt: str, n_buckets: int) -> Counter:
     """Per-row Python mirror: Counter of (b2, b1) event buckets."""
     if not isinstance(text, str):
         return Counter()
-    toks = _TOKEN_RE.findall(text.lower())
+    toks = TOKEN_RE.findall(text.lower())
     return Counter(
         (
             _bucket(toks[i] + " " + toks[i + 1], salt, n_buckets),

@@ -17,7 +17,7 @@ to sub-document granularity; beyond-reference tier (SURVEY.md §6).
 PINNED SEMANTICS (shared by the Arrow builder, the DuckDB oracle, and
 the tests' per-row Python mirror):
 
-- token = ASCII ``\\S+`` match over ``lower(text)`` (repo-wide pin);
+- token = a ``functions/tokens.py`` match over ``lower(text)``;
   gram i (1-based) = tokens i..i+k-1 joined by one space; a doc with
   fewer than k tokens (incl. null text) has NO fingerprints.
 - gram hash = first 15 md5 hex chars of the gram's UTF-8 bytes as a
@@ -45,7 +45,6 @@ and the cap drops the degenerate KEY, not the corpus.
 from __future__ import annotations
 
 import hashlib
-import re
 
 import numpy as np
 import pandas as pd
@@ -53,11 +52,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.tokens import TOKEN_RE
 from datacurator_jl_spark.operators.dedup import _drop_over_cap, _materialize
 from datacurator_jl_spark.operators.dataframe_ops import validate_unique_ids
-
-# ASCII flag: match Java regex \s semantics exactly (repo-wide pin)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 
 def _winnow_one(toks: list[str], k: int, w: int) -> list[int]:
@@ -96,7 +93,7 @@ def winnow_fingerprints_arrow(text: Column, k: int = 3, w: int = 4) -> Column:
             if not isinstance(t, str):
                 out.append([])
                 continue
-            out.append(_winnow_one(_TOKEN_RE.findall(t.lower()), k, w))
+            out.append(_winnow_one(TOKEN_RE.findall(t.lower()), k, w))
         return pd.Series(out, index=texts.index)
 
     udf = F.pandas_udf(batch, returnType=T.ArrayType(T.LongType()))

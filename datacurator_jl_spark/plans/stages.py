@@ -24,17 +24,15 @@ thing in production; nothing else changes.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# pinned tokenization for every model stand-in/fixture: ASCII \S+
-# (CLAUDE.md invariant — str.split() would add unicode whitespace splits)
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
+from datacurator_jl_spark.functions.tokens import token_codes
 
 # per-python-worker model cache: loader id -> loaded model
 _WORKER_MODELS: dict[str, object] = {}
@@ -59,13 +57,12 @@ class FakeLangModel:
         self.markers = {k: set(ws) for k, ws in LANG_MARKERS.items()}
 
     def predict_batch(self, texts: pd.Series) -> pd.DataFrame:
-        # pinned repo-wide ASCII \S+ tokenization (CLAUDE.md invariant)
-        toks = texts.fillna("").str.lower().str.findall(_TOKEN_RE)
-        counts = {
-            k: toks.map(lambda ws, s=s: sum(1 for w in ws if w in s))
-            for k, s in self.markers.items()
-        }
-        df = pd.DataFrame(counts)
+        rows, codes, uniques = token_codes(texts.str.lower())
+        counts = {}
+        for k, s in self.markers.items():
+            hit = np.array([u in s for u in uniques], dtype=bool)
+            counts[k] = np.bincount(rows[hit[codes]], minlength=len(texts))
+        df = pd.DataFrame(counts, index=texts.index)
         best = df.max(axis=1)
         lang = df.idxmax(axis=1).where(best > 0, "und")
         total = df.sum(axis=1)
@@ -77,7 +74,7 @@ class FakePerplexityModel:
     """Deterministic KenLM stand-in: pseudo-logprob = mean of a
     hash-derived per-word score (stable across workers/runs).
 
-    Vectorized like a real scorer would be: explode + factorize, python
+    Vectorized like a real scorer would be: ``token_codes``, python
     only over batch-UNIQUE words (amortized by a vocab cache), C-speed
     groupby mean — so the stage's cost honestly represents the batched
     cost model the planner orders stages by."""
@@ -87,16 +84,12 @@ class FakePerplexityModel:
     def score_batch(self, texts: pd.Series) -> pd.Series:
         import hashlib
 
-        import numpy as np
-
         if len(self._CACHE) > 4_000_000:  # pragma: no cover - safety valve
             self._CACHE.clear()
-        toks = texts.fillna("").str.findall(_TOKEN_RE)
-        ex = toks.explode().dropna()
+        rows, codes, uniques = token_codes(texts)
         out = pd.Series(1e6, index=texts.index, dtype="float64")  # empty doc
-        if ex.empty:
+        if not uniques:
             return out
-        codes, uniques = pd.factorize(ex)
         scores = np.empty(len(uniques), dtype=np.float64)
         for ui, w in enumerate(uniques):
             v = self._CACHE.get(w)
@@ -104,8 +97,10 @@ class FakePerplexityModel:
                 v = float(int(hashlib.md5(w.encode()).hexdigest()[:4], 16) % 1000)
                 self._CACHE[w] = v
             scores[ui] = v
-        means = pd.Series(scores[codes], index=ex.index).groupby(level=0).mean()
-        out[means.index] = means
+        # pandas' (compensated) groupby mean, not bincount: float sums
+        # are pinned to it
+        means = pd.Series(scores[codes]).groupby(rows).mean()
+        out.iloc[means.index] = means.to_numpy()
         return out
 
 
@@ -140,13 +135,13 @@ class JsonPerplexityModel:
         self.unk = float(spec.get("unk", 1e6))
 
     def score_batch(self, texts: pd.Series) -> pd.Series:
-        toks = texts.fillna("").str.findall(_TOKEN_RE)
-        ex = toks.explode().dropna()
+        rows, codes, uniques = token_codes(texts)
         out = pd.Series(1e6, index=texts.index, dtype="float64")  # empty doc
-        if ex.empty:
+        if not uniques:
             return out
-        means = ex.map(self.words).fillna(self.unk).groupby(level=0).mean()
-        out[means.index] = means
+        scores = pd.Series(uniques).map(self.words).fillna(self.unk).to_numpy()
+        means = pd.Series(scores[codes]).groupby(rows).mean()
+        out.iloc[means.index] = means.to_numpy()
         return out
 
 

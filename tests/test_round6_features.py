@@ -521,8 +521,9 @@ def test_winnow_matches_python_mirror(spark):
     """Arrow fingerprint arrays vs the per-row _winnow_one mirror on the
     edge matrix: null text, < k tokens, exactly k tokens (one gram),
     m == w (single window), m > w, repeated grams (tie invariance)."""
+    from datacurator_jl_spark.functions.tokens import TOKEN_RE
     from datacurator_jl_spark.operators.winnow import (
-        _TOKEN_RE, _winnow_one, winnow_fingerprints_arrow,
+        _winnow_one, winnow_fingerprints_arrow,
     )
 
     texts = [
@@ -545,7 +546,7 @@ def test_winnow_matches_python_mirror(spark):
         ).collect()
     }
     for i, t in enumerate(texts):
-        toks = _TOKEN_RE.findall(t.lower()) if t is not None else []
+        toks = TOKEN_RE.findall(t.lower()) if t is not None else []
         assert got[i] == _winnow_one(toks, 3, 4), (i, t)
     assert got[0] == [] and got[2] == [] and len(got[3]) == 1
     assert len(got[4]) == 1 and len(got[6]) == 1  # tie-invariant value set

@@ -173,121 +173,3 @@ def test_bucket_star_edges_components_match_pairwise(spark):
     assert got_star == got_clique
     assert (5, 1) in got_star     # chained across buckets A/B
     assert (8, 7) in got_star and (9, 9) in got_star
-
-
-def test_arrow_stats_tokenizer_parity_reference():
-    """The round-7 Arrow tokenization inside _token_stats_batch
-    (ascii_split_whitespace + empty-token drop + dictionary_encode)
-    must produce the EXACT per-row stats of a re.ASCII \\S+ findall
-    reference -- including the boundary cases where Arrow's splitter
-    emits empty strings (leading/trailing whitespace, all-whitespace
-    docs), the chars Python's ASCII \\s excludes (\\x00, \\x1c-\\x1f,
-    \\x85, \\xa0, U+2028), and the round-7 char/line fields (ncnw/nl/
-    ndl/nsym) against char-by-char references."""
-    import re
-
-    import pandas as pd
-
-    from datacurator_jl_spark.functions.arrow_stats import (
-        _SET_LIST,
-        _TBL,
-        _token_stats_batch,
-    )
-    from datacurator_jl_spark.functions.text import _ALLOWED, _WS, STATS_FIELDS
-
-    rx = re.compile(r"\S+", re.ASCII)
-    cases = [
-        "", " ", "  \t\n ", "\x0b\x0c", None, "a", " a ", "\ta b\r\n",
-        "a\x0bb\x0cc", "a\x00b", "x\xa0y z", "p\x85q", "\x1c\x1d",
-        "the fox the fox", "The THE the", "mixed \u2028 line",
-        " der und la le ", "\v lone \f", "nul\x00 \x00also \x00",
-        "a\nb\na", "\n", "x\n\n", "\n\nx", "li\u0307ne \u0130\n\u0130",
-        "$ymb0l$ & \u00a92024 \u2014 em", "quote\'\"paren() dash-",
-    ]
-    got = _token_stats_batch(pd.Series(cases))
-    for i, t in enumerate(cases):
-        raw = t or ""
-        toks = rx.findall(raw.lower())
-        exp = {name: 0 for name in STATS_FIELDS}
-        exp["nw"] = len(toks)
-        exp["nd"] = len(set(toks))
-        for tok in toks:
-            nu = tok.translate(_TBL)
-            for name, s in _SET_LIST:
-                if nu in s:
-                    exp[name] += 1
-        # round-7 char/line fields (empty-string semantics for null,
-        # computed over the RAW text -- lowercasing can change length)
-        exp["ncnw"] = sum(1 for c in raw if c not in _WS)
-        exp["nsym"] = sum(1 for c in raw if c not in _ALLOWED)
-        lines = raw.split("\n")
-        exp["nl"] = len(lines)
-        exp["ndl"] = len(set(lines))
-        for name in STATS_FIELDS:
-            assert int(got[name].iloc[i]) == exp[name], (t, name, exp)
-
-
-def test_arrow_hash_tokenizer_parity_reference():
-    """The round-7 Arrow tokenization inside _distinct_token_codes
-    (shared by the minhash and simhash batch kernels) must produce
-    signatures EXACTLY equal to the re.ASCII \\S+ findall +
-    explode + drop_duplicates shape it replaced, including boundary
-    whitespace, null text, and the non-ASCII-\\s chars."""
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    import datacurator_jl_spark.functions.arrow_hash as AH
-
-    rx = re.compile(r"\S+", re.ASCII)
-
-    def ref_pairs(texts):
-        toks = texts.fillna("").str.lower().str.findall(rx)
-        ex = toks.explode().dropna()
-        pairs = ex.reset_index()
-        pairs.columns = ["row", "w"]
-        return pairs.drop_duplicates()
-
-    def ref_minhash(texts, k):
-        pairs = ref_pairs(texts)
-        cols = [f"mh{i}" for i in range(k)]
-        if pairs.empty:
-            return pd.DataFrame(
-                index=texts.index, columns=cols, dtype="float64"
-            ).astype("Int64")
-        codes, uniques = pd.factorize(pairs["w"])
-        lanes = np.empty((len(uniques), k), dtype=np.int64)
-        salts = [f"#{i}".encode() for i in range(k)]
-        for ui, w in enumerate(uniques):
-            wb = w.encode("utf-8")
-            lanes[ui] = np.fromiter(
-                (AH._md5_prefix_int(wb + s, 8) for s in salts),
-                dtype=np.int64, count=k,
-            )
-        per_pair = pd.DataFrame(lanes[codes], columns=cols)
-        mins = per_pair.groupby(pairs["row"].values).min()
-        return mins.reindex(texts.index).astype("Int64")
-
-    def ref_simhash(texts, bits):
-        pairs = ref_pairs(texts)
-        out = pd.Series(0, index=texts.index, dtype="int64")
-        if pairs.empty:
-            return out
-        codes, uniques = pd.factorize(pairs["w"])
-        jidx = np.arange(bits)
-        contrib = np.empty((len(uniques), bits), dtype=np.int64)
-        for ui, w in enumerate(uniques):
-            h = AH._md5_prefix_int(w.encode("utf-8"), 15)
-            contrib[ui] = ((h >> jidx) & 1) * 2 - 1
-        sums = pd.DataFrame(contrib[codes]).groupby(pairs["row"].values).sum()
-        out[sums.index] = ((sums.values > 0) @ (1 << jidx)).astype(np.int64)
-        return out
-
-    cases = pd.Series([
-        "", " ", "  \t\n ", None, "a", " a b a ", "\ta b\r\n",
-        "a\x0bb\x0cc", "The the THE", "x\xa0y z", "\v lone \f",
-        "nul\x00 \x00also", "w1 w2 w3 w1", "p\x85q r",
-    ])
-    assert AH._minhash_batch(cases, 4).equals(ref_minhash(cases, 4))
-    assert AH._simhash_batch(cases, 16).equals(ref_simhash(cases, 16))
