@@ -21,9 +21,11 @@ and the DuckDB oracles:
 - hashed word set = distinct ``_h32(w)`` values (for shuffle-payload
   shrink before Jaccard joins).
 
-md5 per *distinct* word is amortized by a module-level word -> lanes
-cache (web-text vocabulary is Zipfian: the cache hit rate dominates);
-the python-level loop touches only batch-NEW words.
+``md5_prefix`` is the one Python spelling of that md5 contract: every
+Python hash in the package calls it, once per batch-unique string. Only
+minhash keeps a per-worker word -> lanes cache: on Zipfian web text a
+long-lived worker finds most of a batch's words there, and a hit costs
+less than the k md5 calls it replaces.
 """
 
 from __future__ import annotations
@@ -39,26 +41,10 @@ from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.tokens import token_codes
 
-_CACHE_CAP = 4_000_000  # per-worker memory bound per (fn, config) cache
+_CACHE_CAP = 4_000_000  # per-worker memory bound of each minhash cache
 
-# word -> np.int64[k] of minhash lanes, per k
-_MH_CACHES: dict[int, dict[str, np.ndarray]] = {}
-# word -> np.int64[bits] of ±1 bit contributions, per bits
-_SH_CACHES: dict[int, dict[str, np.ndarray]] = {}
-# word -> h32 int
-_H32_CACHE: dict[str, int] = {}
-
-
-def _lru_get(cache: dict, key: str):
-    """Cache lookup that refreshes recency: python dicts are
-    insertion-ordered, so re-inserting a hit moves it to the back and
-    eviction from the front becomes least-recently-USED, not merely
-    least-recently-inserted."""
-    v = cache.get(key)
-    if v is not None:
-        del cache[key]
-        cache[key] = v
-    return v
+# word -> the k int64 minhash lanes as 8*k native-order bytes, per k
+_MH_CACHES: dict[int, dict[str, bytes]] = {}
 
 
 def _lru_evict(cache: dict) -> None:
@@ -72,8 +58,21 @@ def _lru_evict(cache: dict) -> None:
         del cache[k]
 
 
-def _md5_prefix_int(data: bytes, nhex: int) -> int:
-    return int(hashlib.md5(data).hexdigest()[:nhex], 16)
+def md5_prefix(strings, suffix: str = "", hexchars: int = 8) -> np.ndarray:
+    """The first ``hexchars`` hex digits of ``md5(s + suffix)`` (UTF-8)
+    for each string, as int64: the Python side of the ``_h32`` contract
+    (``dedup._h32`` is the Column twin). 8 digits is ``_h32``; 15 is the
+    60-bit simhash/winnow word hash. One md5 call per string; the digit
+    slice is one big-endian read of the joined digests."""
+    if not 1 <= hexchars <= 15:
+        raise ValueError(f"hexchars must be in 1..15, got {hexchars}")
+    buf = b"".join(
+        hashlib.md5((s + suffix).encode("utf-8")).digest() for s in strings
+    )
+    # each 16-byte digest is two big-endian u64 words; the prefix lives
+    # in the first one
+    head = np.frombuffer(buf, dtype=">u8")[::2]
+    return (head >> (64 - 4 * hexchars)).astype(np.int64)
 
 
 def _distinct_token_codes(
@@ -90,25 +89,32 @@ def _distinct_token_codes(
     return pk // nu, pk % nu, uniques
 
 
-def _minhash_batch(texts: pd.Series, k: int) -> pd.DataFrame:
+def _minhash_lanes(uniques: list[str], k: int) -> np.ndarray:
+    """(len(uniques), k) int64 lanes. Cache hits are looked up per word;
+    the misses are hashed together, one ``md5_prefix`` call per lane."""
     cache = _MH_CACHES.setdefault(k, {})
     _lru_evict(cache)
+    # pop every batch word and re-insert it below: python dicts are
+    # insertion-ordered, so the words just used move to the back and
+    # eviction from the front is least-recently-USED
+    found = list(map(cache.pop, uniques, itertools.repeat(None)))
+    miss = [w for w, v in zip(uniques, found) if v is None]
+    if miss:
+        new = np.column_stack([md5_prefix(miss, f"#{i}") for i in range(k)])
+        buf, n = new.tobytes(), 8 * k
+        fresh = iter([buf[i : i + n] for i in range(0, len(buf), n)])
+        found = [next(fresh) if v is None else v for v in found]
+    cache.update(zip(uniques, found))
+    return np.frombuffer(b"".join(found), dtype=np.int64).reshape(-1, k)
+
+
+def _minhash_batch(texts: pd.Series, k: int) -> pd.DataFrame:
     rows, codes, uniques = _distinct_token_codes(texts)
     cols = [f"mh{i}" for i in range(k)]
     if not uniques:
         out = pd.DataFrame(index=texts.index, columns=cols, dtype="float64")
         return out.astype("Int64")
-    lanes = np.empty((len(uniques), k), dtype=np.int64)
-    salts = [f"#{i}".encode() for i in range(k)]
-    for ui, w in enumerate(uniques):
-        v = _lru_get(cache, w)
-        if v is None:
-            wb = w.encode("utf-8")
-            v = np.fromiter(
-                (_md5_prefix_int(wb + s, 8) for s in salts), dtype=np.int64, count=k
-            )
-            cache[w] = v
-        lanes[ui] = v
+    lanes = _minhash_lanes(uniques, k)
     per_pair = pd.DataFrame(lanes[codes], columns=cols)
     mins = per_pair.groupby(rows).min()
     # rows with no tokens (empty/whitespace/null text) -> null signature,
@@ -120,21 +126,13 @@ def _minhash_batch(texts: pd.Series, k: int) -> pd.DataFrame:
 
 
 def _simhash_batch(texts: pd.Series, bits: int) -> pd.Series:
-    cache = _SH_CACHES.setdefault(bits, {})
-    _lru_evict(cache)
     rows, codes, uniques = _distinct_token_codes(texts)
     out = pd.Series(0, index=texts.index, dtype="int64")
     if not uniques:
         return out
-    contrib = np.empty((len(uniques), bits), dtype=np.int64)
     jidx = np.arange(bits)
-    for ui, w in enumerate(uniques):
-        v = _lru_get(cache, w)
-        if v is None:
-            h = _md5_prefix_int(w.encode("utf-8"), 15)  # 60-bit word hash
-            v = (((h >> jidx) & 1) * 2 - 1).astype(np.int64)
-            cache[w] = v
-        contrib[ui] = v
+    h = md5_prefix(uniques, hexchars=15)  # 60-bit word hash
+    contrib = ((h[:, None] >> jidx) & 1) * 2 - 1
     sums = pd.DataFrame(contrib[codes]).groupby(rows).sum()
     packed = (sums.values > 0) @ (1 << jidx)
     # groupby keys are batch positions — assign positionally
@@ -143,17 +141,8 @@ def _simhash_batch(texts: pd.Series, bits: int) -> pd.Series:
 
 
 def _h32_wordset_batch(texts: pd.Series) -> pd.Series:
-    _lru_evict(_H32_CACHE)
     rows, codes, uniques = token_codes(texts.str.lower())
-    # touch the LRU once per batch-UNIQUE word (like the minhash path) —
-    # recency refresh per token OCCURRENCE would triple dict ops
-    hs = np.empty(len(uniques), dtype=np.int64)
-    for ui, w in enumerate(uniques):
-        h = _lru_get(_H32_CACHE, w)
-        if h is None:
-            h = _md5_prefix_int(w.encode("utf-8"), 8)
-            _H32_CACHE[w] = h
-        hs[ui] = h
+    hs = md5_prefix(uniques)
     # each row's distinct hashes in first-occurrence order: the first
     # position of every (row, hash) pair (h < 2**32), re-sorted by position
     h = hs[codes]

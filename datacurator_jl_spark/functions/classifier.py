@@ -31,15 +31,14 @@ MB; at fastText scale ship it with ``SparkContext.broadcast`` or a
 per-worker file load as in plans/stages._get_model).
 
 Scale shape: a narrow per-row projection — no shuffle, no collect. The
-Arrow path is one vectorized pandas stage per batch with a per-worker
-token->weight LRU (Zipfian hit rate, same valve as arrow_hash); the
-native HOF twin is CodegenFallback and exists to pin values, not to run
-hot (functions/arrow_stats.py:3-9 measured pattern).
+Arrow path is one vectorized pandas stage per batch that hashes each
+batch-unique token once (``arrow_hash.md5_prefix``); the native HOF
+twin is CodegenFallback and exists to pin values, not to run hot
+(functions/arrow_stats.py:3-9 measured pattern).
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 
 import numpy as np
@@ -48,22 +47,23 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacurator_jl_spark.functions.arrow_hash import _lru_evict, _lru_get
+from datacurator_jl_spark.functions.arrow_hash import md5_prefix
 from datacurator_jl_spark.functions.text import words
 from datacurator_jl_spark.functions.tokens import TOKEN_RE, token_codes
 
-# (n_buckets, salt) -> {token: int weight}, LRU-bounded like arrow_hash
-_W_CACHES: dict[tuple[int, str], dict[str, int]] = {}
+
+def token_buckets(tokens, n_buckets: int, salt: str) -> np.ndarray:
+    """``_h32(tok + '#<salt>') % n_buckets`` for each token, int64."""
+    return md5_prefix(tokens, f"#{salt}") % n_buckets
 
 
-def _h32_py(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-
-def standin_weight(token: str, n_buckets: int, salt: str) -> int:
-    """The pinned stand-in weight of one token (python reference)."""
-    b = _h32_py(f"{token}#{salt}") % n_buckets
-    return _h32_py(f"w{b}#{salt}") % 2001 - 1000
+def standin_weights(tokens, n_buckets: int, salt: str) -> np.ndarray:
+    """The pinned stand-in weight of each token, int64 (python
+    reference and Arrow path alike). Each distinct bucket's ``w{b}``
+    key is hashed once."""
+    ub, inv = np.unique(token_buckets(tokens, n_buckets, salt), return_inverse=True)
+    w = md5_prefix([f"w{b}" for b in ub.tolist()], f"#{salt}") % 2001 - 1000
+    return w[inv]
 
 
 def classifier_score_py(
@@ -75,7 +75,7 @@ def classifier_score_py(
     toks = TOKEN_RE.findall(text.lower())
     if not toks:
         return None
-    s = sum(standin_weight(t, n_buckets, salt) for t in toks)
+    s = int(standin_weights(toks, n_buckets, salt).sum())
     return s / (1000.0 * len(toks))
 
 
@@ -98,20 +98,12 @@ def linear_score_arrow(
 
     @F.pandas_udf(T.DoubleType())
     def _score(texts: pd.Series) -> pd.Series:
-        cache = _W_CACHES.setdefault((n_buckets, salt), {})
         rows, codes, uniques = token_codes(texts.str.lower())
         out = pd.Series(np.nan, index=texts.index, dtype="float64")
         if not uniques:
             return out
         if weights is None:
-            uw = np.empty(len(uniques), dtype=np.int64)
-            for ui, t in enumerate(uniques):
-                v = _lru_get(cache, t)
-                if v is None:
-                    v = standin_weight(t, n_buckets, salt)
-                    cache[t] = v
-                uw[ui] = v
-            _lru_evict(cache)
+            uw = standin_weights(uniques, n_buckets, salt)
             # integer weights: every partial sum is an exact integer far
             # below 2**53, so the float64 bincount equals the int64 sum
             n = np.bincount(rows, minlength=len(texts))
@@ -119,11 +111,7 @@ def linear_score_arrow(
             has = n > 0
             out[has] = sums[has] / (1000.0 * n[has])
         else:
-            buckets = np.fromiter(
-                (_h32_py(f"{t}#{salt}") % n_buckets for t in uniques),
-                dtype=np.int64,
-                count=len(uniques),
-            )
+            buckets = token_buckets(uniques, n_buckets, salt)
             # float weights keep pandas' (compensated) groupby sum: a
             # naive bincount sum would move the last bits of the score
             grouped = pd.Series(weights[buckets][codes]).groupby(rows)

@@ -447,7 +447,10 @@ def simhash(
     ``impl='arrow'`` (default): one Arrow pass per row computing all bit
     lanes (the native variant was ``bits`` interpreted aggregate folds,
     each re-deriving the word-hash array — round-1 VERDICT #2).
-    ``impl='native'`` keeps the JVM fold; values pinned identical."""
+    ``impl='native'`` keeps the JVM fold; values pinned identical.
+    ``bits`` is at most 60: the word hash has no bit above 59."""
+    if not 1 <= bits <= 60:
+        raise ValueError(f"simhash bits must be in 1..60, got {bits}")
     if impl == "arrow":
         from datacurator_jl_spark.functions.arrow_hash import simhash_arrow
 

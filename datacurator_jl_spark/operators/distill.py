@@ -19,9 +19,9 @@ per-row Python mirror — the dsir/e09 integer-determinism posture):
 
 - tokens = ``functions/tokens.py`` over ``lower(text)`` WITH
   multiplicity (exactly the classifier's token stream); feature
-  bucket(tok) = ``_h32(tok + '#' + salt) % n_buckets`` — BYTE-IDENTICAL
-  to ``classifier.standin_weight``'s bucket, so trained weights index
-  the same table the scorer reads.
+  bucket(tok) = ``_h32(tok + '#' + salt) % n_buckets`` — the scorer's
+  own ``classifier.token_buckets``, so trained weights index the same
+  table the scorer reads.
 - model: ``p(doc) = sigmoid(bias + (Σ_b c_b · w_b) / dl)`` — the
   scorer's ``bias + mean(w[bucket(tok)])`` parameterization, so an
   exported model drops into ``linear_score_arrow`` unchanged.
@@ -66,37 +66,18 @@ scalars are N (once) and the one-row bias gradient per iteration
 
 from __future__ import annotations
 
-from collections import Counter
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacurator_jl_spark.functions.classifier import _h32_py
-from datacurator_jl_spark.functions.tokens import TOKEN_RE, token_codes
+from datacurator_jl_spark.functions.classifier import token_buckets
+from datacurator_jl_spark.functions.tokens import token_codes
 from datacurator_jl_spark.operators.dedup import (
     _materialize,
     _materialize_spread,
     _round_away,
 )
-
-
-def _doc_buckets(text, salt: str, n_buckets: int) -> Counter:
-    """Per-row Python mirror of the unigram feature extraction (also the
-    tests' independent oracle)."""
-    if not isinstance(text, str):
-        return Counter()
-    return Counter(
-        _h32_py(f"{t}#{salt}") % n_buckets
-        for t in TOKEN_RE.findall(text.lower())
-    )
-
-
-#: (n_buckets, salt) -> token -> bucket id, shared across batches (the
-#: classifier/arrow_hash worker-cache pattern: Zipfian vocabulary makes
-#: the md5 run only for batch-NEW tokens)
-_B_CACHES: dict[tuple[int, str], dict[str, int]] = {}
 
 
 def unigram_buckets_arrow(
@@ -107,26 +88,19 @@ def unigram_buckets_arrow(
     bigram builder's unigram twin, classifier bucket function).
 
     Round-7 kernel (guide §4.2): code the batch's tokens once,
-    md5-bucket per UNIQUE token (cached across batches), count per
-    (row, bucket) with one ``np.unique`` — replacing a per-doc Python
-    Counter that re-hashed every token OCCURRENCE. Values identical
-    (``_doc_buckets`` stays as the tests' per-row mirror)."""
+    md5-bucket each batch-UNIQUE token, count per (row, bucket) with one
+    ``np.unique`` — replacing a per-doc Python Counter that re-hashed
+    every token OCCURRENCE (tests/test_tokens.py holds the per-row
+    mirror)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
 
     def batch(texts: pd.Series) -> pd.Series:
         import numpy as np
 
-        cache = _B_CACHES.setdefault((n_buckets, salt), {})
         rows, codes, uniques = token_codes(texts.str.lower())
         out_lists: list = [[] for _ in range(len(texts))]
-        bks = np.empty(len(uniques), dtype=np.int64)
-        for i, u in enumerate(uniques):
-            b = cache.get(u)
-            if b is None:
-                b = _h32_py(f"{u}#{salt}") % n_buckets
-                cache[u] = b
-            bks[i] = b
+        bks = token_buckets(uniques, n_buckets, salt)
         uk, cnt = np.unique(rows * n_buckets + bks[codes], return_counts=True)
         for k, c in zip(uk.tolist(), cnt.tolist()):
             out_lists[k // n_buckets].append({"b": k % n_buckets, "c": c})

@@ -50,7 +50,6 @@ function, no driver collect.
 
 from __future__ import annotations
 
-import hashlib
 from collections import Counter
 
 import pandas as pd
@@ -58,40 +57,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.arrow_hash import md5_prefix
 from datacurator_jl_spark.functions.tokens import TOKEN_RE
 from datacurator_jl_spark.operators.dedup import _materialize
-
-
-_BUCKET_CACHE: dict[str, int] = {}
-
-
-def _bucket(gram: str, salt: str, n_buckets: int) -> int:
-    """Per-gram mirror of the pinned bucket hash (also the tests'
-    independent oracle). The cache is keyed on (salt, gram) and holds
-    the UN-modded hash, so any (salt, n_buckets) stage shares hits; the
-    smooth LRU eviction is the arrow_hash doctrine (clear-all drops the
-    whole Zipf head at once — round-2 lesson)."""
-    from datacurator_jl_spark.functions.arrow_hash import _lru_evict, _lru_get
-
-    key = salt + "\x00" + gram
-    v = _lru_get(_BUCKET_CACHE, key)
-    if v is None:
-        v = int.from_bytes(
-            hashlib.md5((gram + "#" + salt).encode("utf-8")).digest()[:4], "big"
-        )
-        _BUCKET_CACHE[key] = v
-        _lru_evict(_BUCKET_CACHE)
-    return v % n_buckets
 
 
 def _doc_buckets(text, salt: str, n_buckets: int) -> Counter:
     if not isinstance(text, str):
         return Counter()
     toks = TOKEN_RE.findall(text.lower())
-    return Counter(
-        _bucket(toks[i] + " " + toks[i + 1], salt, n_buckets)
-        for i in range(len(toks) - 1)
-    )
+    grams = [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
+    return Counter((md5_prefix(grams, "#" + salt) % n_buckets).tolist())
 
 
 def bigram_buckets_arrow(

@@ -54,9 +54,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.arrow_hash import md5_prefix
 from datacurator_jl_spark.functions.tokens import TOKEN_RE
 from datacurator_jl_spark.operators.dedup import _materialize
-from datacurator_jl_spark.operators.dsir import _bucket
 
 
 def _doc_events(text, salt: str, n_buckets: int) -> Counter:
@@ -64,13 +64,10 @@ def _doc_events(text, salt: str, n_buckets: int) -> Counter:
     if not isinstance(text, str):
         return Counter()
     toks = TOKEN_RE.findall(text.lower())
-    return Counter(
-        (
-            _bucket(toks[i] + " " + toks[i + 1], salt, n_buckets),
-            _bucket(toks[i], salt, n_buckets),
-        )
-        for i in range(len(toks) - 1)
-    )
+    grams = [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
+    # bigram buckets, then their context (first-token) buckets, in one call
+    b = (md5_prefix(grams + toks[: len(grams)], "#" + salt) % n_buckets).tolist()
+    return Counter(zip(b[: len(grams)], b[len(grams) :]))
 
 
 def lm_events_arrow(

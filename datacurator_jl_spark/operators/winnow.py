@@ -44,14 +44,13 @@ and the cap drops the degenerate KEY, not the corpus.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datacurator_jl_spark.functions.arrow_hash import md5_prefix
 from datacurator_jl_spark.functions.tokens import TOKEN_RE
 from datacurator_jl_spark.operators.dedup import _drop_over_cap, _materialize
 from datacurator_jl_spark.operators.dataframe_ops import validate_unique_ids
@@ -63,18 +62,8 @@ def _winnow_one(toks: list[str], k: int, w: int) -> list[int]:
     m = len(toks) - k + 1
     if m < 1:
         return []
-    h = np.fromiter(
-        (
-            int.from_bytes(
-                hashlib.md5(" ".join(toks[i : i + k]).encode("utf-8")).digest()[:8],
-                "big",
-            )
-            >> 4  # 15 hex chars = 60 bits: drop the low nibble of byte 8
-            for i in range(m)
-        ),
-        dtype=np.int64,
-        count=m,
-    )
+    # 15 hex digits = the 60-bit gram hash
+    h = md5_prefix([" ".join(toks[i : i + k]) for i in range(m)], hexchars=15)
     if m <= w:
         return [int(h.min())]
     mins = np.lib.stride_tricks.sliding_window_view(h, w).min(axis=1)

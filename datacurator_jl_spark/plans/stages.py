@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datacurator_jl_spark.functions.arrow_hash import md5_prefix
 from datacurator_jl_spark.functions.tokens import token_codes
 
 # per-python-worker model cache: loader id -> loaded model
@@ -74,29 +75,17 @@ class FakePerplexityModel:
     """Deterministic KenLM stand-in: pseudo-logprob = mean of a
     hash-derived per-word score (stable across workers/runs).
 
-    Vectorized like a real scorer would be: ``token_codes``, python
-    only over batch-UNIQUE words (amortized by a vocab cache), C-speed
-    groupby mean — so the stage's cost honestly represents the batched
-    cost model the planner orders stages by."""
-
-    _CACHE: dict[str, float] = {}
+    Vectorized like a real scorer would be: ``token_codes``, one md5
+    per batch-UNIQUE word (``arrow_hash.md5_prefix``), C-speed groupby
+    mean — so the stage's cost honestly represents the batched cost
+    model the planner orders stages by."""
 
     def score_batch(self, texts: pd.Series) -> pd.Series:
-        import hashlib
-
-        if len(self._CACHE) > 4_000_000:  # pragma: no cover - safety valve
-            self._CACHE.clear()
         rows, codes, uniques = token_codes(texts)
         out = pd.Series(1e6, index=texts.index, dtype="float64")  # empty doc
         if not uniques:
             return out
-        scores = np.empty(len(uniques), dtype=np.float64)
-        for ui, w in enumerate(uniques):
-            v = self._CACHE.get(w)
-            if v is None:
-                v = float(int(hashlib.md5(w.encode()).hexdigest()[:4], 16) % 1000)
-                self._CACHE[w] = v
-            scores[ui] = v
+        scores = (md5_prefix(uniques, hexchars=4) % 1000).astype(np.float64)
         # pandas' (compensated) groupby mean, not bincount: float sums
         # are pinned to it
         means = pd.Series(scores[codes]).groupby(rows).mean()

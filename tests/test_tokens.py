@@ -15,6 +15,7 @@ from __future__ import annotations
 import ast
 import hashlib
 import json
+from collections import Counter
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -24,20 +25,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from datacurator_jl_spark.functions import arrow_hash as AH
-from datacurator_jl_spark.functions.arrow_stats import (
-    _SET_LIST,
-    _TBL,
-    _token_stats_batch,
+from datacurator_jl_spark.functions.arrow_stats import _token_stats_batch
+from datacurator_jl_spark.functions.classifier import linear_score_arrow
+from datacurator_jl_spark.functions.text import (
+    _ALLOWED,
+    _WS,
+    PUNCT_STRIP,
+    STAT_SETS,
+    STATS_FIELDS,
 )
-from datacurator_jl_spark.functions.classifier import (
-    _h32_py,
-    classifier_score_py,
-    linear_score_arrow,
-)
-from datacurator_jl_spark.functions.text import _ALLOWED, _WS, STATS_FIELDS
 from datacurator_jl_spark.functions.tokenizer import JsonVocabTokenizer
 from datacurator_jl_spark.functions.tokens import TOKEN_RE, token_codes
-from datacurator_jl_spark.operators.distill import _doc_buckets, unigram_buckets_arrow
+from datacurator_jl_spark.operators.distill import unigram_buckets_arrow
 from datacurator_jl_spark.plans.stages import (
     FakeLangModel,
     FakePerplexityModel,
@@ -97,6 +96,25 @@ def test_token_codes_degenerate_batches():
         assert len(rows) == len(codes) == len(uniques) == 0
 
 
+@pytest.mark.parametrize("hexchars", [4, 8, 15])
+@pytest.mark.parametrize("suffix", ["", "#3"])
+def test_md5_prefix_matches_hashlib(hexchars, suffix):
+    strings = [""] + list(dict.fromkeys(
+        w for t in CASES for lower in (False, True) for w in _toks(t, lower)
+    ))
+    got = AH.md5_prefix(strings, suffix, hexchars)
+    assert got.dtype == np.int64
+    assert got.tolist() == [_md5(w + suffix, hexchars) for w in strings]
+    empty = AH.md5_prefix([], suffix, hexchars)
+    assert empty.dtype == np.int64 and empty.shape == (0,)
+
+
+@pytest.mark.parametrize("hexchars", [0, 16])
+def test_md5_prefix_rejects_hexchars_outside_one_to_fifteen(hexchars):
+    with pytest.raises(ValueError, match="hexchars"):
+        AH.md5_prefix(["a"], hexchars=hexchars)
+
+
 # -- every ported kernel vs its per-row reference ---------------------
 
 
@@ -120,7 +138,16 @@ def _fhex(v):
 
 
 def _md5(w: str, nhex: int) -> int:
+    """The md5 contract spelled independently of ``arrow_hash``."""
     return int(hashlib.md5(w.encode("utf-8")).hexdigest()[:nhex], 16)
+
+
+_STRIP = str.maketrans("", "", PUNCT_STRIP)
+
+
+def _standin_weight(tok: str) -> int:
+    b = _md5(f"{tok}#qw1", 8) % 65536
+    return _md5(f"w{b}#qw1", 8) % 2001 - 1000
 
 
 def k_token_stats(texts, _):
@@ -136,9 +163,9 @@ def r_token_stats(texts, _):
         exp = dict.fromkeys(STATS_FIELDS, 0)
         exp["nw"], exp["nd"] = len(toks), len(set(toks))
         for tok in toks:
-            nu = tok.translate(_TBL)
-            for name, s in _SET_LIST:
-                exp[name] += nu in s
+            nu = tok.translate(_STRIP)
+            for name, ws in STAT_SETS.items():
+                exp[name] += nu in ws
         # char/line fields read the RAW text: lowercasing can change length
         exp["ncnw"] = sum(c not in _WS for c in raw)
         exp["nsym"] = sum(c not in _ALLOWED for c in raw)
@@ -194,7 +221,12 @@ def k_classifier_standin(texts, env):
 
 
 def r_classifier_standin(texts, _):
-    return [_fhex(classifier_score_py(t)) for t in texts]
+    out = []
+    for t in texts:
+        toks = _toks(t)
+        s = sum(_standin_weight(w) for w in toks)
+        out.append(_fhex(s / (1000.0 * len(toks)) if toks else None))
+    return out
 
 
 _W = np.sin(np.arange(512) * 0.7) / 3.0  # non-dyadic: sum order shows
@@ -207,7 +239,7 @@ def k_classifier_weights(texts, env):
 
 def r_classifier_weights(texts, _):
     ex = _exploded(texts, lower=True)
-    w = ex.map(lambda t: _W[_h32_py(f"{t}#qw1") % 512]).astype("float64")
+    w = ex.map(lambda t: _W[_md5(f"{t}#qw1", 8) % 512]).astype("float64")
     sums = w.groupby(level=0).sum()
     n = ex.groupby(level=0).size()
     out = pd.Series(np.nan, index=texts.index)
@@ -221,7 +253,10 @@ def k_distill(texts, env):
 
 
 def r_distill(texts, _):
-    return [sorted(_doc_buckets(t, "s1", 64).items()) for t in texts]
+    return [
+        sorted(Counter(_md5(f"{w}#s1", 8) % 64 for w in _toks(t)).items())
+        for t in texts
+    ]
 
 
 def k_lang_model(texts, _):
@@ -247,8 +282,7 @@ def k_perplexity_model(texts, _):
 def r_perplexity_model(texts, _):
     out = []
     for t in texts:
-        s = [float(int(hashlib.md5(w.encode()).hexdigest()[:4], 16) % 1000)
-             for w in _toks(t, lower=False)]
+        s = [float(_md5(w, 4) % 1000) for w in _toks(t, lower=False)]
         out.append(_fhex(sum(s) / len(s) if s else 1e6))
     return out
 
@@ -343,4 +377,25 @@ def test_one_token_definition():
             if (isinstance(node, ast.Attribute) and node.attr == "findall"
                     and isinstance(node.value, ast.Attribute) and node.value.attr == "str"):
                 offenders.append((rel, line, ".str.findall"))
+    assert offenders == []
+
+
+def test_one_md5_definition():
+    """``arrow_hash.md5_prefix`` is the package's only Python md5: no
+    ``hashlib`` anywhere else (Spark ``F.md5`` Columns and DuckDB SQL
+    strings are not Python hashing and stay legal)."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "functions/arrow_hash.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            names = [a.name for a in getattr(node, "names", [])
+                     if isinstance(node, (ast.Import, ast.ImportFrom))]
+            if isinstance(node, ast.ImportFrom):
+                names.append(node.module or "")
+            if isinstance(node, ast.Name):
+                names.append(node.id)
+            if any(n.split(".")[0] == "hashlib" for n in names):
+                offenders.append((rel, node.lineno))
     assert offenders == []
