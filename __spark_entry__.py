@@ -23,6 +23,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     from datacurator_jl_spark.engine import Pipeline
     from datacurator_jl_spark.functions import text as X
+    from datacurator_jl_spark.functions.arrow_stats import token_stats_arrow
     from datacurator_jl_spark.recipe import parse_recipe
 
     spec = parse_recipe(
@@ -45,12 +46,14 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     res = Pipeline(spec).apply(df)
-    return res.df.select(
+    t = F.col("text")
+    s = F.col("_s")
+    return res.df.withColumn("_s", token_stats_arrow(t)).select(
         "doc_id",
         F.col("dc_kept").alias("keep"),
         F.col("dc_rule_id").alias("rule_id"),
-        F.round(X.quality_score(F.col("text")), 6).alias("quality"),
-        X.lang_id(F.col("text")).alias("lang_pred"),
+        F.round(X.quality_score(t, s), 6).alias("quality"),
+        X.lang_id(t, s).alias("lang_pred"),
     )
 
 

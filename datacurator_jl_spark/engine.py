@@ -49,10 +49,6 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datacurator_jl_spark.functions.arrow_stats import token_stats_arrow
-from datacurator_jl_spark.functions.classifier import linear_score
-from datacurator_jl_spark.functions.compress import compression_ratio_arrow
-from datacurator_jl_spark.functions.rep_stats import rep_stats_arrow
 from datacurator_jl_spark.operators import (
     boilerplate,
     dataframe_ops,
@@ -64,10 +60,8 @@ from datacurator_jl_spark.operators import (
 )
 from datacurator_jl_spark.recipe import RecipeError, RecipeSpec, Rule
 from datacurator_jl_spark.registry import (
-    CLASSIFIER_CONDITIONS,
-    COMPRESSION_CONDITIONS,
-    REPSTATS_CONDITIONS,
     ROWCOUNT_CONDITIONS,
+    SHARED_COLS,
     ActionSpec,
     RuleContext,
     compile_action,
@@ -75,10 +69,6 @@ from datacurator_jl_spark.registry import (
     compile_metric,
 )
 
-STATS_COL = "_dc_stats"
-REP_COL = "_dc_rep"
-CLS_COL = "_dc_cls"
-COMP_COL = "_dc_comp"
 DECISION_COL = "_dc_decision"
 KEPT_COL = "dc_kept"
 RULE_COL = "dc_rule_id"
@@ -519,30 +509,6 @@ PREPASSES: tuple[PrePass, ...] = (
             "per-source flow with streaming.domain_quota_stream"),
 )
 
-# Shared pre-projections over the text column: (column, the condition
-# pool that asks for it or None = always, factory). Each is projected
-# ONCE and every rule reads it. Catalyst keeps the projections separate
-# (CollapseProject refuses to inline a non-cheap alias referenced many
-# times), whole-stage codegen fuses them into one pass, and one no rule
-# references is column-pruned away entirely. Measured ~3x over
-# re-deriving inside each rule (conditional CASE branches get no
-# codegen subexpression elimination). _dc_stats is the Arrow twin of
-# the token-stats fold (functions/arrow_stats.py): the native HOF fold
-# is interpreted (CodegenFallback) and anti-scales on a shared heap, so
-# the JVM never splits the text. The scores are struct-wrapped like
-# _dc_stats: CollapseProject inlines a bare non-cheap double alias into
-# every reference (re-extracting the UDF once per use), but leaves
-# GetStructField reads on the pre-projection — one Arrow stage
-# regardless of rule count (pinned in test_plans).
-_SHARED_COLS: tuple[tuple[str, set[str] | None, Callable[[Column], Column]], ...] = (
-    (STATS_COL, None, token_stats_arrow),
-    (REP_COL, REPSTATS_CONDITIONS, rep_stats_arrow),
-    (CLS_COL, CLASSIFIER_CONDITIONS, lambda t: F.struct(linear_score(t).alias("score"))),
-    (COMP_COL, COMPRESSION_CONDITIONS,
-     lambda t: F.struct(compression_ratio_arrow(t).alias("ratio"))),
-)
-
-
 class Pipeline:
     """Compiled recipe. ``apply(df)`` adds decision/transform columns."""
 
@@ -550,19 +516,13 @@ class Pipeline:
         self.spec = spec
 
     def _ctx(self, df: DataFrame, row_count: int | None = None) -> RuleContext:
-        def present(c: str) -> str | None:
-            return c if c in df.columns else None
-
         return RuleContext(
             name_col=self.spec.name_col,
             text_col=self.spec.text_col,
-            html_col=present(self.spec.html_col),
+            html_col=self.spec.html_col if self.spec.html_col in df.columns else None,
             available_cols=df.columns,
             spec=self.spec,
-            stats_col=present(STATS_COL),
-            rep_col=present(REP_COL),
-            cls_col=present(CLS_COL),
-            comp_col=present(COMP_COL),
+            shared_cols=tuple(c for c in SHARED_COLS if c in df.columns),
             row_count=row_count,
         )
 
@@ -618,7 +578,9 @@ class Pipeline:
         input_cols = list(df.columns)
         if spec.text_col in df.columns:
             tcol = F.col(spec.text_col)
-            for col, pool, make in _SHARED_COLS:
+            # the shared pre-projections (registry.SHARED_COLS): each
+            # projected once, read by every rule that needs it
+            for col, (pool, make) in SHARED_COLS.items():
                 if pool is None or self._uses_condition_from(pool):
                     df = df.withColumn(col, make(tcol))
         ctx = self._ctx(df, row_count=row_count)

@@ -1,17 +1,18 @@
-"""Arrow-vectorized twin of ``text.token_stats``.
+"""The shared word-stats struct, ``token_stats_arrow``: the one Spark
+route for every word-derived heuristic in ``functions/text.py``.
 
-Why this exists: the native higher-order-function fold is CodegenFallback
-— interpreted row-at-a-time — and measurably ANTI-scales on a shared JVM
-heap (10.3s on 8 cores -> 33.7s on 32 cores for 1M docs: allocation
-contention). The Arrow path runs in per-core Python worker PROCESSES
-(no shared heap) with C-backed pandas ops: 8x faster single-threaded and
-process-parallel. This is the north-star's sanctioned pattern (batched
-pandas/Arrow stages), not per-row Python.
+Why Arrow: a JVM higher-order-function fold over the words array is
+CodegenFallback — interpreted row-at-a-time — and measurably
+ANTI-scales on a shared JVM heap (10.3s on 8 cores -> 33.7s on 32 cores
+for 1M docs: allocation contention). The Arrow path runs in per-core
+Python worker PROCESSES (no shared heap) with C-backed pandas ops: 8x
+faster single-threaded and process-parallel. This is the north-star's
+sanctioned pattern (batched pandas/Arrow stages), not per-row Python.
 
-Semantics are PINNED IDENTICAL to text.token_stats / the DuckDB oracle:
+Semantics are pinned to the DuckDB oracle and ``testing/oracle.py``:
 token = a ``functions/tokens.py`` token of the lowercased text,
-PUNCT_STRIP chars deleted, exact set membership. tests/test_operators.py
-asserts arrow == native on the synthetic corpus.
+PUNCT_STRIP chars deleted, exact set membership. tests/test_tokens.py
+checks the batch kernel against a per-row reference.
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.text import (
     _ALLOWED,
-    LANG_MARKERS,
     PUNCT_STRIP,
     STAT_SETS,
     STATS_FIELDS,
@@ -126,7 +126,7 @@ def _token_stats_batch(texts: pd.Series) -> pd.DataFrame:
 
 
 def token_stats_arrow(text: Column) -> Column:
-    """struct(sw, en, de, fr, es, it) via a scalar pandas UDF.
+    """struct(STATS_FIELDS) via a scalar pandas UDF.
 
     Built lazily (pandas_udf needs an active session to resolve types).
     """

@@ -1,6 +1,8 @@
 """Text-quality heuristic expressions (Gopher/C4-style), all as native
 ``pyspark.sql.Column`` expressions — JVM-side, whole-stage-codegen'd,
-never per-row Python.
+never per-row Python. Word-derived heuristics take the shared stats
+struct (``arrow_stats.token_stats_arrow``, one Arrow batch pass) as a
+required argument and only read its fields.
 
 These are the graft analogue of the reference's content-describe ops
 (``describe_image`` 8-moment stats, reference src/DataCurator.jl:902-916)
@@ -77,76 +79,39 @@ def words(text: Column) -> Column:
     return F.array_remove(F.split(text, r"\s+"), "")
 
 
-def n_words(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
-    if stats is not None:
-        return stats.getField("nw")
-    return F.size(words(text) if w is None else w)
+def n_words(text: Column, stats: Column) -> Column:
+    return stats.getField("nw")
 
 
 def n_lines(text: Column) -> Column:
     return F.size(F.split(text, r"\n"))
 
 
-def mean_word_length(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def mean_word_length(text: Column, stats: Column) -> Column:
     """Average token length; null for empty docs.
 
     Computed as (non-whitespace chars) / (word count) — mathematically
     identical to averaging per-word lengths (the split consumes exactly
-    the whitespace), but avoids a higher-order aggregate: HOF expressions
-    are CodegenFallback and knock the whole projection out of whole-stage
-    codegen."""
-    nw = n_words(text, w, stats)
-    if stats is not None:
-        # round-7: the shared struct already counted non-ws chars
-        # (``ncnw``); null text has nw=0 so the branch below yields
-        # null either way — value-identical to the translate re-scan
-        total = stats.getField("ncnw")
-    else:
-        total = F.length(F.translate(text, _WS, ""))
-    return F.when(nw > 0, total.cast("double") / nw)
+    the whitespace). Null text has nw=0, so it yields null too."""
+    nw = n_words(text, stats)
+    return F.when(nw > 0, stats.getField("ncnw").cast("double") / nw)
 
 
-def distinct_word_ratio(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def distinct_word_ratio(text: Column, stats: Column) -> Column:
     """|distinct lowercase words| / |words|; 1.0 for empty docs.
 
-    Low values = repeated-word spam (Gopher repetition rule).
-
-    ``w``, when given, must be the LOWERCASED words array (the engine
-    pre-projects words over lower(text)); this keeps the expression free
-    of per-element lambdas so the projection stays codegen-eligible."""
-    if stats is not None:
-        nw = stats.getField("nw")
-        return F.when(
-            nw > 0, stats.getField("nd").cast("double") / nw
-        ).otherwise(F.lit(1.0))
-    w = words(F.lower(text)) if w is None else w
-    nw = F.size(w)
-    return F.when(nw > 0, F.size(F.array_distinct(w)).cast("double") / nw).otherwise(
+    Low values = repeated-word spam (Gopher repetition rule)."""
+    nw = n_words(text, stats)
+    return F.when(nw > 0, stats.getField("nd").cast("double") / nw).otherwise(
         F.lit(1.0)
     )
 
 
-def distinct_line_ratio(text: Column, stats: Column | None = None) -> Column:
-    """|distinct lines| / |lines|; repeated-line spam detector.
-
-    ``stats`` (round-7): read the shared struct's nl/ndl instead of
-    re-splitting the text. Null text: direct path has nl=null →
-    otherwise → 1.0; struct path has nl=ndl=1 (empty-string
-    semantics) → 1/1 = 1.0 — same value."""
-    if stats is not None:
-        nl = stats.getField("nl")
-        return F.when(
-            nl > 0, stats.getField("ndl").cast("double") / nl
-        ).otherwise(F.lit(1.0))
-    lines = F.split(text, r"\n")
-    nl = F.size(lines)
-    return F.when(nl > 0, F.size(F.array_distinct(lines)).cast("double") / nl).otherwise(
+def distinct_line_ratio(text: Column, stats: Column) -> Column:
+    """|distinct lines| / |lines|; repeated-line spam detector. Null text
+    has nl=ndl=1 (empty-string semantics), so it scores 1.0."""
+    nl = stats.getField("nl")
+    return F.when(nl > 0, stats.getField("ndl").cast("double") / nl).otherwise(
         F.lit(1.0)
     )
 
@@ -195,30 +160,23 @@ def uppercase_ratio(text: Column) -> Column:
     )
 
 
-def symbol_ratio(text: Column, stats: Column | None = None) -> Column:
+def symbol_ratio(text: Column, stats: Column) -> Column:
     """Fraction of characters outside letters/digits/whitespace/basic
-    punctuation — the C4 'symbol ratio' junk detector.
-
-    ``stats`` (round-7): read the shared struct's ``nsym`` count
-    instead of a translate re-scan; ``n`` stays length(text), so null
-    text still falls to 0.0 on both paths — same value."""
+    punctuation — the C4 'symbol ratio' junk detector. ``n`` is
+    length(text), so null text falls to 0.0."""
     n = F.length(text)
-    if stats is not None:
-        bad = stats.getField("nsym")
-    else:
-        bad = F.length(F.translate(text, _ALLOWED, ""))
-    return F.when(n > 0, bad.cast("double") / n).otherwise(F.lit(0.0))
+    return F.when(n > 0, stats.getField("nsym").cast("double") / n).otherwise(
+        F.lit(0.0)
+    )
 
 
 # ---------------------------------------------------------------------------
-# Token-membership stats: stopword + language-marker counts in ONE array
-# traversal (measured ~2x over per-set regex \b scans, and the struct is
-# shareable across rules via the engine's pre-projection — regex scans
-# inside conditional CASE branches lose codegen subexpression elimination
-# entirely and get re-evaluated per reference).
+# Word stats: every word-derived heuristic reads ONE shared struct,
+# ``arrow_stats.token_stats_arrow`` (the engine pre-projects it as
+# ``_dc_stats``; a standalone condition builds the same kernel inline).
 #
 # Token semantics (pinned): token = whitespace-split word, lowercased,
-# with common punctuation characters DELETED (translate), then exact
+# with common punctuation characters (PUNCT_STRIP) deleted, then exact
 # set membership. So "The," counts, "the-fox" does not.
 # ---------------------------------------------------------------------------
 
@@ -226,78 +184,27 @@ PUNCT_STRIP = ".,;:!?\"'()[]"
 
 STAT_SETS: dict[str, list[str]] = {"sw": EN_STOPWORDS, **LANG_MARKERS}
 
-
-def norm_tokens(text: Column, w: Column | None = None) -> Column:
-    w = words(text) if w is None else w
-    return F.transform(w, lambda x: F.translate(F.lower(x), PUNCT_STRIP, ""))
-
-
 #: struct fields: word count, distinct words, set counts, then the
-#: round-7 char/line stats (non-ws chars, line count, distinct lines,
-#: symbol chars) — appended LAST so nothing positional moves. Token
-#: fields are zero-for-null; the char/line fields use empty-string
-#: semantics for null text (``coalesce(text, '')``: nl=ndl=1, counts 0)
-#: — every consuming ratio lands on the exact same value the direct
-#: expression produced for null (see symbol_ratio/distinct_line_ratio/
-#: mean_word_length).
+#: char/line stats (non-ws chars, line count, distinct lines, symbol
+#: chars). Token fields are zero-for-null; the char/line fields use
+#: empty-string semantics for null text (nl=ndl=1, counts 0).
 STATS_FIELDS = ("nw", "nd", *STAT_SETS, "ncnw", "nl", "ndl", "nsym")
 
 
-def token_stats(text: Column, w: Column | None = None) -> Column:
-    """struct(nw, nd, sw, en, de, fr, es, it): word count, distinct
-    lowercase word count, and set-membership counts over normalized
-    tokens. Engine pre-projects this (or its Arrow twin) as ONE shared
-    column so every word-derived rule reads struct fields.
-
-    ``w``, when given, must be the LOWERCASED words array.
-    Null text yields the ZERO struct (not null) — pinned to match the
-    Arrow twin (functions/arrow_stats.py)."""
-    w = words(F.lower(text)) if w is None else w
-    w = F.coalesce(w, F.array().cast("array<string>"))
-    nt = F.transform(w, lambda x: F.translate(x, PUNCT_STRIP, ""))
-    zero = F.struct(*[F.lit(0).alias(c) for c in STAT_SETS])
-
-    def step(acc: Column, x: Column) -> Column:
-        return F.struct(
-            *[
-                (acc[c] + F.when(x.isin(ws), 1).otherwise(0)).alias(c)
-                for c, ws in STAT_SETS.items()
-            ]
-        )
-
-    sets = F.aggregate(nt, zero, step)
-    raw = F.coalesce(text, F.lit(""))
-    lines = F.split(raw, r"\n")
-    return F.struct(
-        F.size(w).alias("nw"),
-        F.size(F.array_distinct(w)).alias("nd"),
-        *[sets.getField(c).alias(c) for c in STAT_SETS],
-        # round-7 char/line stats: one shared pass instead of a
-        # translate/split re-scan per consuming rule (empty-string
-        # semantics for null text — see STATS_FIELDS note)
-        F.length(F.translate(raw, _WS, "")).alias("ncnw"),
-        F.size(lines).alias("nl"),
-        F.size(F.array_distinct(lines)).alias("ndl"),
-        F.length(F.translate(raw, _ALLOWED, "")).alias("nsym"),
-    )
+def stopword_hits(text: Column, stats: Column) -> Column:
+    return stats.getField("sw")
 
 
-def stopword_hits(text: Column, stats: Column | None = None) -> Column:
-    s = token_stats(text) if stats is None else stats
-    return s.getField("sw")
-
-
-def stopword_ratio(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def stopword_ratio(text: Column, stats: Column) -> Column:
     """English stop-word tokens / word count; 0.0 for empty docs."""
-    hits = stopword_hits(text, stats)
-    nw = n_words(text, w, stats)
-    return F.when(nw > 0, hits.cast("double") / nw).otherwise(F.lit(0.0))
+    nw = n_words(text, stats)
+    return F.when(
+        nw > 0, stopword_hits(text, stats).cast("double") / nw
+    ).otherwise(F.lit(0.0))
 
 
-def max_word_length(text: Column, w: Column | None = None) -> Column:
-    w = words(text) if w is None else w
+def max_word_length(text: Column) -> Column:
+    w = words(text)
     return F.when(
         F.size(w) > 0,
         F.array_max(F.transform(w, lambda x: F.length(x))),
@@ -333,9 +240,9 @@ def terminal_punct_line_ratio(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Language ID (heuristic, fully native — the vectorized stand-in for a
-# fastText stage; the mapInPandas model-stage plumbing lives in
-# plans/stages.py for when a real model is available)
+# Language ID (heuristic over the shared struct's marker counts — the
+# vectorized stand-in for a fastText stage; the mapInPandas model-stage
+# plumbing lives in plans/stages.py for when a real model is available)
 # ---------------------------------------------------------------------------
 
 
@@ -351,13 +258,10 @@ def cjk_score(text: Column) -> Column:
     return (cjk / F.lit(4)).cast("int")
 
 
-def _lang_score_cols(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> dict[str, Column]:
-    """Language -> integer score: marker-token counts from the (possibly
-    pre-projected) token_stats struct; zh from the CJK character ratio."""
-    s = token_stats(text, w) if stats is None else stats
-    scores = {k: s.getField(k) for k in LANG_MARKERS}
+def _lang_score_cols(text: Column, stats: Column) -> dict[str, Column]:
+    """Language -> integer score: marker-token counts from the shared
+    stats struct; zh from the CJK character ratio."""
+    scores = {k: stats.getField(k) for k in LANG_MARKERS}
     scores["zh"] = cjk_score(text)
     return scores
 
@@ -365,26 +269,13 @@ def _lang_score_cols(
 LANG_ORDER = [*LANG_MARKERS, "zh"]  # fixed tie-break order
 
 
-def lang_scores(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
-    """Map of language -> score."""
-    scores = _lang_score_cols(text, w, stats)
-    return F.map_from_arrays(
-        F.array(*[F.lit(k) for k in LANG_ORDER]),
-        F.array(*[scores[k] for k in LANG_ORDER]),
-    )
-
-
-def lang_id(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def lang_id(text: Column, stats: Column) -> Column:
     """argmax language by score; 'und' (undetermined) when all zero.
 
     Ties break by the fixed LANG_ORDER (deterministic — SURVEY.md §7.4
     requires documented tie-breaking).
     """
-    counts = _lang_score_cols(text, w, stats)
+    counts = _lang_score_cols(text, stats)
     best = F.greatest(*counts.values())
     expr = F.lit("und")
     # build reversed when-chain so earlier languages win ties
@@ -393,28 +284,24 @@ def lang_id(
     return expr
 
 
-def lang_top_score(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
-    return F.greatest(*_lang_score_cols(text, w, stats).values())
+def lang_top_score(text: Column, stats: Column) -> Column:
+    return F.greatest(*_lang_score_cols(text, stats).values())
 
 
 # ---------------------------------------------------------------------------
-# Perplexity proxy (KenLM stand-in): a deterministic, fully-native score.
-# Real-model plumbing (per-worker lazy load, Arrow batches) is in
-# plans/stages.py; this native proxy keeps the hot path JVM-side.
+# Perplexity proxy (KenLM stand-in): a deterministic score over the
+# shared stats struct. Real-model plumbing (per-worker lazy load, Arrow
+# batches) is in plans/stages.py.
 # ---------------------------------------------------------------------------
 
 
-def perplexity_proxy(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def perplexity_proxy(text: Column, stats: Column) -> Column:
     """Lower = more natural text. Combines stopword density, word-length
     shape and repetition into one score in [0, ~10]. Deterministic.
     """
-    sw = stopword_ratio(text, w, stats)
-    mwl = F.coalesce(mean_word_length(text, w, stats), F.lit(0.0))
-    rep = distinct_word_ratio(text, w, stats)
+    sw = stopword_ratio(text, stats)
+    mwl = F.coalesce(mean_word_length(text, stats), F.lit(0.0))
+    rep = distinct_word_ratio(text, stats)
     sym = symbol_ratio(text, stats)
     # natural English: sw ~0.3-0.6, mwl ~4-6, rep high, sym ~0
     return (
@@ -443,14 +330,12 @@ def fingerprint(text: Column) -> Column:
     return F.md5(norm)
 
 
-def quality_score(
-    text: Column, w: Column | None = None, stats: Column | None = None
-) -> Column:
+def quality_score(text: Column, stats: Column) -> Column:
     """Composite quality in [0,1], higher = better. Weighted, deterministic
     blend of the heuristics — a native stand-in for a learned quality model.
     """
-    sw = F.least(stopword_ratio(text, w, stats) * F.lit(2.5), F.lit(1.0))
-    rep = distinct_word_ratio(text, w, stats)
+    sw = F.least(stopword_ratio(text, stats) * F.lit(2.5), F.lit(1.0))
+    rep = distinct_word_ratio(text, stats)
     sym = F.lit(1.0) - F.least(symbol_ratio(text, stats) * F.lit(5.0), F.lit(1.0))
     alpha = alpha_ratio(text)
     return (sw * F.lit(0.35) + rep * F.lit(0.25) + sym * F.lit(0.2) + alpha * F.lit(0.2))

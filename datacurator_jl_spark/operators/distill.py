@@ -74,7 +74,6 @@ from pyspark.sql import types as T
 from datacurator_jl_spark.functions.classifier import token_buckets
 from datacurator_jl_spark.functions.tokens import token_codes
 from datacurator_jl_spark.operators.dedup import (
-    _materialize,
     _materialize_spread,
     _round_away,
 )

@@ -30,7 +30,6 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from datacurator_jl_spark.functions.arrow_hash import md5_prefix
 from datacurator_jl_spark.functions.tokens import token_codes

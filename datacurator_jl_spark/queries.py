@@ -308,8 +308,8 @@ def q10(spark, sf):
 # Documents: text analysis + quality filter + dedup
 # ---------------------------------------------------------------------------
 
-# normalized-token list in DuckDB SQL — mirrors text.norm_tokens exactly
-# (whitespace split, lowercase, strip PUNCT_STRIP chars)
+# normalized-token list in DuckDB SQL — the token semantics of the shared
+# stats struct (whitespace split, lowercase, strip PUNCT_STRIP chars)
 _SQL_NT = (
     "list_transform(regexp_extract_all(lower(trim(text)), '[^ \\t\\n\\x0b\\f\\r]+'),"
     " w -> translate(w, '.,;:!?\"''()[]', ''))"
@@ -317,7 +317,8 @@ _SQL_NT = (
 
 
 def _sql_set_count(wordlist: list[str]) -> str:
-    """len(list_filter(tokens, x -> x IN (...))) — token_stats twin."""
+    """len(list_filter(tokens, x -> x IN (...))) — one set-count field
+    of the shared stats struct."""
     lits = ", ".join(f"'{w}'" for w in wordlist)
     return f"len(list_filter({_SQL_NT}, x -> x IN ({lits})))"
 
@@ -352,8 +353,7 @@ def d01(spark, sf):
 def d02(spark, sf):
     """Per-document text stats — the graft analogue of describe_image
     per-element stats (SURVEY.md §2.5). Word-derived stats read ONE
-    pre-projected Arrow token-stats struct (the engine's own strategy;
-    the native HOF fold is CodegenFallback and anti-scales)."""
+    pre-projected Arrow token-stats struct, as the engine does."""
     from datacurator_jl_spark.functions.arrow_stats import token_stats_arrow
 
     d = _t(spark, sf, "documents")
@@ -363,10 +363,10 @@ def d02(spark, sf):
     return d.select(
         "doc_id",
         X.n_chars(t).alias("chars"),
-        X.n_words(t, stats=s).alias("n_words"),
+        X.n_words(t, s).alias("n_words"),
         X.token_count(t).alias("tokens"),
-        F.round(X.distinct_word_ratio(t, stats=s), 6).alias("distinct_word_ratio"),
-        F.round(X.stopword_ratio(t, stats=s), 6).alias("stopword_ratio"),
+        F.round(X.distinct_word_ratio(t, s), 6).alias("distinct_word_ratio"),
+        F.round(X.stopword_ratio(t, s), 6).alias("stopword_ratio"),
     )
 
 
@@ -398,7 +398,7 @@ def d03(spark, sf):
     d = _t(spark, sf, "documents")
     t = F.col("text")
     d = d.withColumn("_s", token_stats_arrow(t))
-    return d.select("doc_id", X.lang_id(t, stats=F.col("_s")).alias("lang_pred"))
+    return d.select("doc_id", X.lang_id(t, F.col("_s")).alias("lang_pred"))
 
 
 _D04_SQL = """
@@ -699,7 +699,7 @@ def d45(spark, sf):
     return d.select(
         "doc_id",
         token_count_column(F.col("text")).cast("int").alias("toks"),
-        X.n_words(F.col("text")).cast("int").alias("n_words"),
+        F.size(X.words(F.col("text"))).cast("int").alias("n_words"),
         F.length("text").cast("int").alias("n_chars_text"),
     )
 
@@ -890,7 +890,7 @@ def d10(spark, sf):
     d = d.withColumn("_s", token_stats_arrow(t))
     return d.select(
         "doc_id",
-        F.round(X.quality_score(t, stats=F.col("_s")), 6).alias("quality"),
+        F.round(X.quality_score(t, F.col("_s")), 6).alias("quality"),
     )
 
 
@@ -1172,7 +1172,7 @@ def d13(spark, sf):
     d = d.withColumn("_s", token_stats_arrow(t))
     return d.select(
         "doc_id",
-        F.round(X.perplexity_proxy(t, stats=F.col("_s")), 6).alias("ppl"),
+        F.round(X.perplexity_proxy(t, F.col("_s")), 6).alias("ppl"),
     )
 
 
@@ -2809,7 +2809,7 @@ def d49(spark, sf):
     scored = d.withColumn("_s", token_stats_arrow(t)).select(
         "doc_id",
         "lang",
-        F.round(X.quality_score(t, stats=F.col("_s")), 6).alias("quality"),
+        F.round(X.quality_score(t, F.col("_s")), 6).alias("quality"),
     )
     return quantile_buckets(scored, "quality", "lang", exact=True).select(
         "doc_id", "lang", "bucket"

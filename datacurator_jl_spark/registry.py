@@ -26,7 +26,16 @@ from datacurator_jl_spark.functions import predicates as P
 from datacurator_jl_spark.functions import scrub as S
 from datacurator_jl_spark.functions import text as X
 from datacurator_jl_spark.functions import transforms as TR
+from datacurator_jl_spark.functions.arrow_stats import token_stats_arrow
+from datacurator_jl_spark.functions.classifier import linear_score
+from datacurator_jl_spark.functions.compress import compression_ratio_arrow
+from datacurator_jl_spark.functions.rep_stats import rep_stats_arrow
 from datacurator_jl_spark.recipe import RecipeError, RecipeSpec
+
+STATS_COL = "_dc_stats"
+REP_COL = "_dc_rep"
+CLS_COL = "_dc_cls"
+COMP_COL = "_dc_comp"
 
 
 @dataclass
@@ -38,18 +47,9 @@ class RuleContext:
     html_col: str | None = "html"
     available_cols: list[str] | None = None
     spec: RecipeSpec | None = None
-    # set by the engine to the pre-projected shared token-stats struct so
-    # every word-based heuristic reads ONE Arrow pass per row instead of
-    # re-deriving the stats inside each rule
-    stats_col: str | None = None
-    # shared repetition-stats struct (functions/rep_stats.py), pre-
-    # projected by the engine iff a repetition condition is used
-    rep_col: str | None = None
-    # shared classifier score (functions/classifier.py), pre-projected
-    # by the engine iff a classifier condition is used
-    cls_col: str | None = None
-    # shared compression-ratio struct (functions/compress.py), same deal
-    comp_col: str | None = None
+    # the SHARED_COLS the engine pre-projected on the frame; every other
+    # shared column is built inline by shared()
+    shared_cols: tuple[str, ...] = ()
     # input cardinality, computed ONCE by the engine (parquet metadata
     # count) iff the recipe uses a row-count condition
     row_count: int | None = None
@@ -62,13 +62,18 @@ class RuleContext:
     def text(self) -> Column:
         return F.col(self.text_col)
 
-    @property
-    def stats(self) -> Column | None:
-        return F.col(self.stats_col) if self.stats_col else None
+    def shared(self, col: str) -> Column:
+        """The shared column ``col`` (a SHARED_COLS key): the engine's
+        pre-projection when present, else the same factory over the
+        text column — one kernel either way."""
+        if col in self.shared_cols:
+            return F.col(col)
+        return SHARED_COLS[col][1](self.text)
 
     @property
-    def rep(self) -> Column | None:
-        return F.col(self.rep_col) if self.rep_col else None
+    def stats(self) -> Column:
+        """The shared word-stats struct every word heuristic reads."""
+        return self.shared(STATS_COL)
 
     @property
     def size(self) -> Column:
@@ -94,6 +99,11 @@ def _cond(name: str, lo: int, hi: int):
         return fn
 
     return deco
+
+
+def _between(c: Column, lo, hi) -> Column:
+    """lo < c < hi (open band), with ``c`` built once."""
+    return (c > lo) & (c < hi)
 
 
 # -- trivial ---------------------------------------------------------------
@@ -175,18 +185,18 @@ _cond("has_text", 0, 0)(
 _cond("min_length", 1, 1)(lambda ctx, n: F.length(ctx.text) >= int(n))
 _cond("max_length", 1, 1)(lambda ctx, n: F.length(ctx.text) <= int(n))
 _cond("min_words", 1, 1)(
-    lambda ctx, n: X.n_words(ctx.text, stats=ctx.stats) >= int(n)
+    lambda ctx, n: X.n_words(ctx.text, ctx.stats) >= int(n)
 )
 _cond("max_words", 1, 1)(
-    lambda ctx, n: X.n_words(ctx.text, stats=ctx.stats) <= int(n)
+    lambda ctx, n: X.n_words(ctx.text, ctx.stats) <= int(n)
 )
 _cond("word_count_between", 1, 1)(
-    lambda ctx, lohi: (X.n_words(ctx.text, stats=ctx.stats) > int(lohi[0]))
-    & (X.n_words(ctx.text, stats=ctx.stats) < int(lohi[1]))
+    lambda ctx, lohi: _between(X.n_words(ctx.text, ctx.stats), int(lohi[0]), int(lohi[1]))
 )
 _cond("mean_word_length_between", 1, 1)(
-    lambda ctx, lohi: (X.mean_word_length(ctx.text, stats=ctx.stats) > float(lohi[0]))
-    & (X.mean_word_length(ctx.text, stats=ctx.stats) < float(lohi[1]))
+    lambda ctx, lohi: _between(
+        X.mean_word_length(ctx.text, ctx.stats), float(lohi[0]), float(lohi[1])
+    )
 )
 _cond("max_word_length_below", 1, 1)(
     lambda ctx, n: X.max_word_length(ctx.text) < int(n)
@@ -205,32 +215,23 @@ _cond("encoding_noise_below", 1, 1)(
     lambda ctx, r: X.encoding_noise_ratio(ctx.text) < float(r)
 )
 _cond("stopword_ratio_above", 1, 1)(
-    lambda ctx, r: X.stopword_ratio(ctx.text, stats=ctx.stats) > float(r)
+    lambda ctx, r: X.stopword_ratio(ctx.text, ctx.stats) > float(r)
 )
 _cond("min_stopword_hits", 1, 1)(
     lambda ctx, n: X.stopword_hits(ctx.text, ctx.stats) >= int(n)
 )
 _cond("word_repetition_below", 1, 1)(
-    lambda ctx, r: X.distinct_word_ratio(ctx.text, stats=ctx.stats)
+    lambda ctx, r: X.distinct_word_ratio(ctx.text, ctx.stats)
     > F.lit(1.0) - float(r)
 )
 _cond("line_repetition_below", 1, 1)(
     lambda ctx, r: X.distinct_line_ratio(ctx.text, ctx.stats) > F.lit(1.0) - float(r)
 )
 # -- Gopher repetition conditions (functions/rep_stats.py struct). All
-#    read the pre-projected shared ``_dc_rep`` struct when the engine
-#    provides one (ONE Arrow pass for all 13 fields across all rules);
-#    standalone compile_condition falls back to building the struct
-#    inline. n is validated at Column-build time — still fail-before-data
-#    (Pipeline compiles every rule before touching rows). ------------------
-
-
-def _rep(ctx: "RuleContext") -> Column:
-    if ctx.rep is not None:
-        return ctx.rep
-    from datacurator_jl_spark.functions.rep_stats import rep_stats_arrow
-
-    return rep_stats_arrow(ctx.text)
+#    read the shared ``_dc_rep`` struct (ONE Arrow pass for all 13
+#    fields across all rules). n is validated at Column-build time —
+#    still fail-before-data (Pipeline compiles every rule before
+#    touching rows). --------------------------------------------------------
 
 
 def _rep_cond(ctx: "RuleContext", field: str, r) -> Column:
@@ -239,7 +240,9 @@ def _rep_cond(ctx: "RuleContext", field: str, r) -> Column:
     # text condition follows (null ⇒ failed, not "not repetitive"):
     # an unguarded `0.0 < r` would silently KEEP null docs under
     # act_on_success=true recipes.
-    return F.when(ctx.text.isNotNull(), _rep(ctx).getField(field) < float(r))
+    return F.when(
+        ctx.text.isNotNull(), ctx.shared(REP_COL).getField(field) < float(r)
+    )
 
 
 def _rep_ngram_cond(ctx: "RuleContext", prefix: str, n, r, allowed) -> Column:
@@ -288,16 +291,16 @@ _cond("terminal_punct_ratio_above", 1, 1)(
     lambda ctx, r: X.terminal_punct_line_ratio(ctx.text) > float(r)
 )
 _cond("lang_is", 1, 1)(
-    lambda ctx, code: X.lang_id(ctx.text, stats=ctx.stats) == code
+    lambda ctx, code: X.lang_id(ctx.text, ctx.stats) == code
 )
 _cond("lang_confident", 1, 1)(
-    lambda ctx, k: X.lang_top_score(ctx.text, stats=ctx.stats) >= int(k)
+    lambda ctx, k: X.lang_top_score(ctx.text, ctx.stats) >= int(k)
 )
 _cond("perplexity_below", 1, 1)(
-    lambda ctx, p: X.perplexity_proxy(ctx.text, stats=ctx.stats) < float(p)
+    lambda ctx, p: X.perplexity_proxy(ctx.text, ctx.stats) < float(p)
 )
 _cond("quality_above", 1, 1)(
-    lambda ctx, q: X.quality_score(ctx.text, stats=ctx.stats) > float(q)
+    lambda ctx, q: X.quality_score(ctx.text, ctx.stats) > float(q)
 )
 _cond("contains_pii", 0, 0)(lambda ctx: S.contains_pii(ctx.text))
 _cond("contains_toxicity", 0, 0)(lambda ctx: S.contains_toxicity(ctx.text))
@@ -305,50 +308,49 @@ _cond("contains_toxicity", 0, 0)(lambda ctx: S.contains_toxicity(ctx.text))
 # Stand-in weights unless DC_QUALITY_MODEL points at a json model —
 # the same explicit-path > env > stand-in contract as the langid/
 # perplexity stages. Null text / zero tokens -> null (condition fails).
-# Reads the engine's pre-projected ``_dc_cls`` column when provided
-# (ONE Arrow stage no matter how many rules score); standalone
-# compile_condition falls back to scoring inline.
+# Reads the shared ``_dc_cls`` column (ONE Arrow stage no matter how
+# many rules score).
 CLASSIFIER_CONDITIONS = {"classifier_score_above", "classifier_score_below"}
 
 # zlib compression-ratio band-pass (functions/compress.py): repetition/
 # entropy proxy. Null/empty text -> null ratio -> condition fails.
-# Shares the engine's pre-projected ``_dc_comp`` struct when provided —
-# same single-Arrow-stage discipline as _dc_cls/_dc_rep.
+# Reads the shared ``_dc_comp`` struct — same single-Arrow-stage
+# discipline as _dc_cls/_dc_rep.
 COMPRESSION_CONDITIONS = {"compression_ratio_between"}
 
 _cond("compression_ratio_between", 1, 1)(
-    lambda ctx, lohi: _compress_between(ctx, lohi)
+    lambda ctx, lohi: _between(
+        ctx.shared(COMP_COL).getField("ratio"), float(lohi[0]), float(lohi[1])
+    )
 )
-
-
-def _compress_between(ctx: "RuleContext", lohi) -> Column:
-    lo, hi = lohi
-    if ctx.comp_col is not None:
-        r = F.col(ctx.comp_col).getField("ratio")
-    else:
-        from datacurator_jl_spark.functions.compress import (
-            compression_ratio_arrow,
-        )
-
-        r = compression_ratio_arrow(ctx.text)
-    return (r > float(lo)) & (r < float(hi))
-
 _cond("classifier_score_above", 1, 1)(
-    lambda ctx, thr: _classifier_score(ctx) > float(thr)
+    lambda ctx, thr: ctx.shared(CLS_COL).getField("score") > float(thr)
 )
 _cond("classifier_score_below", 1, 1)(
-    lambda ctx, thr: _classifier_score(ctx) < float(thr)
+    lambda ctx, thr: ctx.shared(CLS_COL).getField("score") < float(thr)
 )
 
-
-def _classifier_score(ctx: "RuleContext") -> Column:
-    if ctx.cls_col is not None:
-        # single-field struct read — the GetStructField access pattern
-        # that keeps CollapseProject from inlining the UDF per reference
-        return F.col(ctx.cls_col).getField("score")
-    from datacurator_jl_spark.functions.classifier import linear_score
-
-    return linear_score(ctx.text)
+# Shared pre-projections over the text column: column -> (the condition
+# pool that asks for it or None = always, factory). The engine projects
+# each ONCE and every rule reads it; RuleContext.shared builds the same
+# factory inline when a condition is compiled without the engine.
+# Catalyst keeps the projections separate (CollapseProject refuses to
+# inline a non-cheap alias referenced many times), whole-stage codegen
+# fuses them into one pass, and one no rule references is column-pruned
+# away entirely. Measured ~3x over re-deriving inside each rule
+# (conditional CASE branches get no codegen subexpression elimination).
+# The scores are struct-wrapped like _dc_stats: CollapseProject inlines
+# a bare non-cheap double alias into every reference (re-extracting the
+# UDF once per use), but leaves GetStructField reads on the
+# pre-projection — one Arrow stage regardless of rule count (pinned in
+# test_plans).
+SHARED_COLS: dict[str, tuple[set[str] | None, Callable[[Column], Column]]] = {
+    STATS_COL: (None, token_stats_arrow),
+    REP_COL: (REPSTATS_CONDITIONS, rep_stats_arrow),
+    CLS_COL: (CLASSIFIER_CONDITIONS, lambda t: F.struct(linear_score(t).alias("score"))),
+    COMP_COL: (COMPRESSION_CONDITIONS,
+               lambda t: F.struct(compression_ratio_arrow(t).alias("ratio"))),
+}
 
 
 # -- table-shape assertions (reference has_n_columns/has_columns_named/
@@ -808,7 +810,7 @@ def _compile_transform(e: Any) -> Callable[[Column], Column]:
 METRICS: dict[str, Callable[[RuleContext], Column]] = {
     "size_of_file": lambda ctx: ctx.size,
     "n_chars": lambda ctx: X.n_chars(ctx.text),
-    "n_words": lambda ctx: X.n_words(ctx.text),
+    "n_words": lambda ctx: F.size(X.words(ctx.text)),
     "token_count": lambda ctx: _seam_token_count(ctx.text),
 }
 

@@ -39,8 +39,10 @@ _PUNCT_TABLE = str.maketrans("", "", ".,;:!?\"'()[]")  # text.PUNCT_STRIP
 
 
 def _norm_tokens(t: str) -> list[str]:
-    """Mirror of text.norm_tokens: whitespace split, lowercase, strip
-    punctuation characters (token-based stopword/langid semantics)."""
+    """The set-membership tokens of the shared stats struct
+    (``arrow_stats.token_stats_arrow``): whitespace split, lowercase,
+    strip punctuation characters (token-based stopword/langid
+    semantics)."""
     return [w.lower().translate(_PUNCT_TABLE) for w in _words(t)]
 
 

@@ -197,37 +197,6 @@ def test_salted_repartition_spreads_hot_key(spark, docs_df):
     assert len(sizes) > 1  # spread over multiple partitions
 
 
-# --- arrow/native token-stats parity -----------------------------------------
-
-
-def test_arrow_token_stats_equals_native(spark):
-    from datacurator_jl_spark.functions.arrow_stats import token_stats_arrow
-    from datacurator_jl_spark.functions import text as X
-
-    rows = [
-        (1, "The quick, brown fox! AND the (lazy) dog."),
-        (2, "der Der DER und 'und' nicht?"),
-        (3, ""),
-        (4, "   "),
-        (5, None),
-        (6, "le la  les\tet\nest que"),
-        (7, "the-fox and_dog the. the"),
-        # round-1 fuzz regressions: leading/trailing NON-SPACE whitespace
-        # (F.trim strips only spaces — these flushed out the divergence)
-        (8, "\n"),
-        (9, "\nfoo"),
-        (10, "\tbar "),
-        (11, " . "),
-        (12, "\t"),
-        (13, "\tthe fox"),
-        (14, "x\n\n\ny"),
-    ]
-    df = spark.createDataFrame(rows, "id int, text string")
-    native = {r.id: r.s.asDict() for r in df.select("id", X.token_stats(F.col("text")).alias("s")).collect()}
-    arrow = {r.id: r.s.asDict() for r in df.select("id", token_stats_arrow(F.col("text")).alias("s")).collect()}
-    assert native == arrow
-
-
 def test_arrow_signatures_equal_native(spark):
     """minhash/simhash Arrow twins pinned value-identical to the JVM
     fold exprs (incl. null/empty/whitespace-only edge docs)."""

@@ -7,7 +7,10 @@ and trailing whitespace (Arrow's splitter emits empty tokens there),
 all-whitespace and null text, vertical tab and form feed (whitespace
 under ``re.ASCII``), and the characters ``re.ASCII`` does NOT treat as
 whitespace but Unicode does (``\\x00``, ``\\x1c``-``\\x1f``, ``\\x85``,
-``\\xa0``, U+2028), plus case folds that change length (``İ``).
+``\\xa0``, U+2028), plus case folds that change length (``İ``), and
+stop-word / language-marker sentences whose punctuation the stats
+struct's set counts strip (``"(lazy)"``, ``"'und'"``, ``"the."``) or keep
+(``"the-fox"``).
 """
 
 from __future__ import annotations
@@ -52,6 +55,8 @@ CASES = [
     "The the THE", "w1 w2 w3 w1", "mixed \u2028 line", " der und la le ",
     "a\nb\na", "x\n\n", "\n\nx", "li\u0307ne \u0130\n\u0130",
     "$ymb0l$ & \u00a92024 \u2014 em", "quote'\"paren() dash-",
+    "The quick, brown fox! AND the (lazy) dog.", "der Der DER und 'und' nicht?",
+    "le la  les\tet\nest que", "the-fox and_dog the. the", "   ", "x\n\n\ny",
 ]
 
 
@@ -377,6 +382,29 @@ def test_one_token_definition():
             if (isinstance(node, ast.Attribute) and node.attr == "findall"
                     and isinstance(node.value, ast.Attribute) and node.value.attr == "str"):
                 offenders.append((rel, line, ".str.findall"))
+    assert offenders == []
+
+
+def test_no_unused_module_imports():
+    """Every module-level import in the package (``__init__.py`` files
+    re-export, so they are skipped) is referenced by name somewhere in
+    its module: a dead import ties one module to another for nothing."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text(), rel)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for a in node.names:
+                name = (a.asname or a.name).split(".")[0]
+                if name not in used:
+                    offenders.append((rel, node.lineno, name))
     assert offenders == []
 
 
