@@ -1,16 +1,16 @@
-"""Arrow-vectorized signature twins: minhash / simhash / hashed word sets.
+"""Arrow-vectorized signature kernels: minhash / simhash / hashed word sets.
 
-Why this exists (round-2 perf fix, VERDICT "What's wrong" #2-3): the
-native signature exprs were k (minhash) and 16 (simhash) separate
+Why Arrow (round-2 perf fix, VERDICT "What's wrong" #2-3): the JVM
+signature exprs were k (minhash) and 16 (simhash) separate
 higher-order-function folds per row — HOFs are CodegenFallback
 (interpreted) and measurably ANTI-scale on a shared JVM heap (see
-functions/arrow_stats.py:3-9 for the measured pattern). This module is
-the sanctioned alternative: ONE Arrow-batched pandas stage per row doing
-all k/16 hash lanes in a single pass, running in per-core Python worker
+functions/arrow_stats.py:4-10 for the measured pattern). This module is
+the only Spark route: ONE Arrow-batched pandas stage per row doing all
+k/16 hash lanes in a single pass, running in per-core Python worker
 processes with C-backed pandas/numpy ops.
 
-Semantics are PINNED IDENTICAL to the native exprs in operators/dedup.py
-and the DuckDB oracles:
+Semantics are PINNED to the DuckDB oracles and the per-row references
+in tests/test_tokens.py:
 
 - token list = ``functions/tokens.py`` over ``lower(text)``,
   de-duplicated;

@@ -16,7 +16,7 @@ PINNED SEMANTICS (stand-in path, oracle-exact):
   — an INTEGER in [-1000, 1000]. Integer weights are the cross-engine
   trick: the per-doc sum is exact and summation-order-free in int64,
   and the score is ONE final double division
-  ``sum / (1000.0 * n_tokens)`` — so Spark (native and Arrow), DuckDB,
+  ``sum / (1000.0 * n_tokens)`` — so the Spark Arrow kernel, DuckDB,
   and the per-row Python oracle agree BIT-EXACTLY, with no float-sum
   ordering hazard.
 - zero tokens or null text -> null score (condition fails, engine
@@ -32,9 +32,9 @@ per-worker file load as in plans/stages._get_model).
 
 Scale shape: a narrow per-row projection — no shuffle, no collect. The
 Arrow path is one vectorized pandas stage per batch that hashes each
-batch-unique token once (``arrow_hash.md5_prefix``); the native HOF
-twin is CodegenFallback and exists to pin values, not to run hot
-(functions/arrow_stats.py:3-9 measured pattern).
+batch-unique token once (``arrow_hash.md5_prefix``) — the only Spark
+route: a JVM higher-order fold would be CodegenFallback (interpreted)
+and anti-scale (measured in the functions/arrow_stats.py docstring).
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.arrow_hash import md5_prefix
-from datacurator_jl_spark.functions.text import words
 from datacurator_jl_spark.functions.tokens import TOKEN_RE, token_codes
 
 
@@ -121,32 +120,6 @@ def linear_score_arrow(
         return out
 
     return _score(col)
-
-
-def linear_score_native(
-    col: Column, n_buckets: int = 65536, salt: str = "qw1"
-) -> Column:
-    """Pure-JVM twin of the stand-in score (pinned value-identical to
-    the Arrow path; CodegenFallback HOFs — for pinning, not the hot
-    path)."""
-    from datacurator_jl_spark.operators.dedup import _h32
-
-    ws = words(F.lower(col))
-    wt = F.transform(
-        ws,
-        lambda t: _h32(
-            F.concat(
-                F.lit("w"),
-                F.pmod(_h32(t, f"#{salt}"), F.lit(n_buckets)).cast("string"),
-            ),
-            f"#{salt}",
-        )
-        % 2001
-        - 1000,
-    )
-    s = F.aggregate(wt, F.lit(0).cast("bigint"), lambda a, x: a + x)
-    n = F.size(ws)
-    return F.when(n > 0, s.cast("double") / (F.lit(1000.0) * n))
 
 
 def load_linear_model(path: str) -> tuple[int, np.ndarray, float]:

@@ -22,9 +22,8 @@ no shuffle on the corpus side; the only corpus-side work is the gram
 explode + one groupBy(id) count of matches (partial aggregation, and
 only matching grams reach the aggregate). Grams are built in ONE Arrow
 pass (per-doc distinct inside the batch — no corpus-wide distinct
-shuffle); the native HOF builder is the pinned-identical cross-check.
-n is the knob: larger n shrinks both the gram fan-out overlap rate and
-the broadcast set.
+shuffle). n is the knob: larger n shrinks both the gram fan-out overlap
+rate and the broadcast set.
 """
 
 from __future__ import annotations
@@ -37,32 +36,12 @@ from pyspark.sql import types as T
 from datacurator_jl_spark.functions.tokens import TOKEN_RE
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """array<string> of space-joined word n-grams; empty when the doc
-    has fewer than n tokens (incl. null text).
-
-    Native Column form — kept as the pinned-identical reference twin of
-    the Arrow builder below (tests assert value identity), but it is a
-    CodegenFallback higher-order chain (transform/slice/array_join),
-    interpreted row-at-a-time: the hot path uses the Arrow form, the
-    same split as minhash (operators/dedup.py impl='native')."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    w = F.array_remove(F.split(F.lower(text), r"\s+"), "")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(w) - n),
-        lambda i: F.array_join(F.slice(w, i + F.lit(1), n), " "),
-    )
-    return F.when(F.size(w) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def word_ngrams_arrow(text: Column, n: int, distinct: bool = False) -> Column:
-    """Arrow twin of :func:`word_ngrams` (optionally per-doc distinct,
-    order not guaranteed when distinct — callers explode/join, never
-    index). Vectorized batch in per-core Python workers; the JVM never
-    builds the gram arrays."""
+    """array<string> of space-joined word n-grams in document order;
+    empty when the doc has fewer than n tokens (incl. null text). With
+    ``distinct`` each gram appears once, order not guaranteed (callers
+    explode/join, never index). Vectorized batch in per-core Python
+    workers; the JVM never builds the gram arrays."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
 
@@ -86,14 +65,11 @@ def word_ngrams_arrow(text: Column, n: int, distinct: bool = False) -> Column:
     return udf(text)
 
 
-def benchmark_ngrams(
-    bench_df: DataFrame, text_col: str, n: int, impl: str = "arrow"
-) -> DataFrame:
+def benchmark_ngrams(bench_df: DataFrame, text_col: str, n: int) -> DataFrame:
     """The distinct benchmark gram set — one column ``gram``."""
-    build = word_ngrams_arrow if impl == "arrow" else word_ngrams
     return (
         bench_df.select(
-            F.explode(build(F.col(text_col), n)).alias("gram")
+            F.explode(word_ngrams_arrow(F.col(text_col), n)).alias("gram")
         )
         .distinct()
     )
@@ -104,7 +80,6 @@ def dup_ngram_stats(
     id_col: str,
     text_col: str,
     n: int = 3,
-    impl: str = "arrow",
     materialize: str = "local",
     validate_ids: bool = True,
 ) -> DataFrame:
@@ -147,10 +122,7 @@ def dup_ngram_stats(
         )
 
         validate_unique_ids(df, id_col, "dup_ngram_stats")
-    if impl == "arrow":
-        grams = word_ngrams_arrow(F.col(text_col), n, distinct=True)
-    else:
-        grams = F.array_distinct(word_ngrams(F.col(text_col), n))
+    grams = word_ngrams_arrow(F.col(text_col), n, distinct=True)
     dg = _materialize(
         df.select(F.col(id_col).alias("_dc_id"), F.explode(grams).alias("gram")),
         materialize,
@@ -189,16 +161,13 @@ def decontaminate(
     bench_text_col: str | None = None,
     n: int = 8,
     drop: bool = False,
-    impl: str = "arrow",
     hits_col: str = "hits",
     flag_col: str = "contaminated",
     validate_ids: bool = True,
 ) -> DataFrame:
     """All original columns plus ``hits_col`` (int, distinct shared
     n-grams) and ``flag_col`` (bool). With ``drop=True``, contaminated
-    rows are removed instead (no marker columns added). ``impl='native'``
-    switches to the interpreted HOF gram builder (pinned-identical,
-    for cross-checking).
+    rows are removed instead (no marker columns added).
 
     The marker column names are parameters and COLLIDING with an
     existing input column raises (silently clobbering a user's ``hits``
@@ -224,19 +193,13 @@ def decontaminate(
         )
 
         validate_unique_ids(df, id_col, "decontaminate")
-    bench = F.broadcast(
-        benchmark_ngrams(bench_df, bench_text_col or text_col, n, impl)
-    )
-    if impl == "arrow":
-        grams = word_ngrams_arrow(F.col(text_col), n, distinct=True)
-    else:
-        # per-doc distinct (no shuffle) — a corpus-wide .distinct() would
-        # shuffle every gram of every document just to deduplicate within
-        # documents, which (id, gram) uniqueness already gives us
-        grams = F.array_distinct(word_ngrams(F.col(text_col), n))
+    bench = F.broadcast(benchmark_ngrams(bench_df, bench_text_col or text_col, n))
+    # per-doc distinct (no shuffle) — a corpus-wide .distinct() would
+    # shuffle every gram of every document just to deduplicate within
+    # documents, which (id, gram) uniqueness already gives us
     doc_grams = df.select(
         F.col(id_col).alias("_dc_id"),
-        F.explode(grams).alias("gram"),
+        F.explode(word_ngrams_arrow(F.col(text_col), n, distinct=True)).alias("gram"),
     )
     hits = (
         doc_grams.join(bench, "gram")

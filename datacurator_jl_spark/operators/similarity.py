@@ -285,10 +285,9 @@ def srp_near_dup_pairs(
     policy as ``lsh_candidate_pairs``: ``local`` | ``reliable`` |
     a directory path for a persisted parquet signature table).
     """
-    from datacurator_jl_spark.operators.dedup import _materialize
+    from datacurator_jl_spark.operators.dedup import _materialize, _rows_per_band
 
-    assert bits % bands == 0
-    rows = bits // bands
+    rows = _rows_per_band(bits, bands, "bits")
     mask = (1 << rows) - 1
     sig = srp_signature(df.select(id_col, emb_col), emb_col, dim, bits, seed)
     # Null/ragged embeddings have NULL signatures (srp_signature) — they

@@ -1637,8 +1637,8 @@ def d30(spark, sf):
     bit-identical across Spark/DuckDB/Python — the cross-engine trick
     that lets a learned-scoring path be oracle-checked at all. Runs the
     Arrow hot path (one vectorized stage, one md5 per batch-unique token);
-    the native HOF twin and the DC_QUALITY_MODEL json seam are pinned
-    in pytest (functions/classifier.py)."""
+    the DC_QUALITY_MODEL json seam is pinned in pytest
+    (functions/classifier.py)."""
     from datacurator_jl_spark.functions.classifier import linear_score_arrow
 
     return _t(spark, sf, "documents").select(

@@ -13,7 +13,7 @@ from datacurator_jl_spark.operators.boilerplate import (
 )
 from datacurator_jl_spark.operators.decontam import (
     decontaminate,
-    word_ngrams,
+    word_ngrams_arrow,
 )
 
 
@@ -78,12 +78,12 @@ def test_word_ngrams(spark):
     df = spark.createDataFrame(
         [("a b c d",), ("one",), (None,), ("  x \t y  ",)], "text string"
     )
-    got = [r[0] for r in df.select(word_ngrams(F.col("text"), 3)).collect()]
+    got = [r[0] for r in df.select(word_ngrams_arrow(F.col("text"), 3)).collect()]
     assert got[0] == ["a b c", "b c d"]
     assert got[1] == []  # fewer than n tokens
     assert got[2] == []  # null text
     df2 = spark.createDataFrame([("  x \t y  ",)], "text string")
-    assert df2.select(word_ngrams(F.col("text"), 2)).first()[0] == ["x y"]
+    assert df2.select(word_ngrams_arrow(F.col("text"), 2)).first()[0] == ["x y"]
 
 
 def test_decontaminate_hits_and_drop(spark):
@@ -161,42 +161,6 @@ def test_recipe_boilerplate_validation():
                     "any": {"conditions": ["always"], "actions": ["keep"]},
                 }
             )
-
-
-def test_word_ngrams_arrow_matches_native(spark):
-    from datacurator_jl_spark.operators.decontam import word_ngrams_arrow
-
-    texts = [
-        "a b c d e", "one", None, "", "  x \t y \x0b z ",
-        "rep rep rep rep", "Mixed CASE mixed case",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    for n in (2, 3, 5):
-        rows = df.select(
-            word_ngrams(F.col("text"), n).alias("nat"),
-            word_ngrams_arrow(F.col("text"), n).alias("arr"),
-            word_ngrams_arrow(F.col("text"), n, distinct=True).alias("arrd"),
-        ).collect()
-        for r in rows:
-            assert r["nat"] == r["arr"]
-            assert sorted(set(r["nat"])) == sorted(r["arrd"])
-
-
-def test_decontaminate_native_impl_matches_arrow(spark):
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(
-            ["the quick brown fox", "novel words only here", None, "the quick"]
-        )],
-        "id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(9, "THE QUICK BROWN cat")], "id long, text string"
-    )
-    a = {r["id"]: r["hits"] for r in
-         decontaminate(docs, "id", "text", bench, n=3).collect()}
-    b = {r["id"]: r["hits"] for r in
-         decontaminate(docs, "id", "text", bench, n=3, impl="native").collect()}
-    assert a == b
 
 
 def test_decontaminate_probe_is_broadcast(spark):

@@ -197,35 +197,6 @@ def test_salted_repartition_spreads_hot_key(spark, docs_df):
     assert len(sizes) > 1  # spread over multiple partitions
 
 
-def test_arrow_signatures_equal_native(spark):
-    """minhash/simhash Arrow twins pinned value-identical to the JVM
-    fold exprs (incl. null/empty/whitespace-only edge docs)."""
-    from datacurator_jl_spark.operators.dedup import minhash_signature, simhash
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the the the the"),
-        (3, ""),
-        (4, "   \n\t "),
-        (5, None),
-        (6, "çüé 漢字 mixed UNICODE words"),
-        (7, "\tleading and trailing\n"),
-    ]
-    df = spark.createDataFrame(rows, "id int, text string")
-    for impl_pair in ["minhash", "simhash"]:
-        if impl_pair == "minhash":
-            a = minhash_signature(df, "text", k=4, impl="arrow")
-            n = minhash_signature(df, "text", k=4, impl="native")
-            cols = ["mh0", "mh1", "mh2", "mh3"]
-        else:
-            a = simhash(df, "text", impl="arrow")
-            n = simhash(df, "text", impl="native")
-            cols = ["simhash"]
-        ra = {r.id: tuple(r[c] for c in cols) for r in a.collect()}
-        rn = {r.id: tuple(r[c] for c in cols) for r in n.collect()}
-        assert ra == rn, (impl_pair, ra, rn)
-
-
 def test_near_dup_components_transitive(spark):
     """a~b and b~c must cluster a,b,c together even if a!~c directly
     (the property pairwise dedup misses and components fix)."""
@@ -321,6 +292,23 @@ def test_srp_near_dup_skew_guards(spark, tmp_path):
     )
     assert {(r.id_a, r.id_b) for r in mat.collect()} == {(20_000, 20_001)}
     assert any(p.name.startswith("dc-mat-") for p in tmp_path.iterdir())
+
+
+@pytest.mark.parametrize("bands", [0, 3])
+@pytest.mark.parametrize("op", ["minhash_lsh", "srp"])
+def test_band_count_must_divide_the_signature(spark, op, bands):
+    """8 minhash lanes or 16 SRP bits cut into 0 or 3 bands would divide
+    by zero or silently leave the last lanes out of every band key: a
+    ValueError, not a bare assert that ``python -O`` strips."""
+    with pytest.raises(ValueError, match="positive multiple of bands"):
+        if op == "minhash_lsh":
+            df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+            DD.lsh_candidate_pairs(df, "doc_id", "text", k=8, bands=bands)
+        else:
+            df = spark.createDataFrame(
+                [(1, [1.0] * 4)], "vec_id long, embedding array<float>"
+            )
+            SIM.srp_near_dup_pairs(df, "vec_id", "embedding", 4, bits=16, bands=bands)
 
 
 def test_line_ratio_heuristics_edges(spark):

@@ -286,13 +286,12 @@ def test_simhash_prefix_block_validates_bits(spark, docs_df):
         DD.simhash_prefix_block(docs_df, "text", prefix_bits=17, bits=16)
 
 
-@pytest.mark.parametrize("impl", ["arrow", "native"])
 @pytest.mark.parametrize("bits", [0, 61, 64, 70])
-def test_simhash_rejects_bits_past_the_word_hash(spark, docs_df, bits, impl):
+def test_simhash_rejects_bits_past_the_word_hash(spark, docs_df, bits):
     """The word hash has 60 bits: a wider simhash would repeat the
     bits=60 value and leave its top blocks empty."""
     with pytest.raises(ValueError, match="bits must be in 1..60"):
-        DD.simhash(docs_df, "text", bits=bits, impl=impl)
+        DD.simhash(docs_df, "text", bits=bits)
     if bits > 6:
         with pytest.raises(ValueError, match="bits must be in 1..60"):
-            DD.simhash_prefix_block(docs_df, "text", bits=bits, impl=impl)
+            DD.simhash_prefix_block(docs_df, "text", bits=bits)

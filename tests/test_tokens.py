@@ -39,6 +39,8 @@ from datacurator_jl_spark.functions.text import (
 )
 from datacurator_jl_spark.functions.tokenizer import JsonVocabTokenizer
 from datacurator_jl_spark.functions.tokens import TOKEN_RE, token_codes
+from datacurator_jl_spark.operators.decontam import word_ngrams_arrow
+from datacurator_jl_spark.operators.dedup import _h32
 from datacurator_jl_spark.operators.distill import unigram_buckets_arrow
 from datacurator_jl_spark.plans.stages import (
     FakeLangModel,
@@ -57,6 +59,13 @@ CASES = [
     "$ymb0l$ & \u00a92024 \u2014 em", "quote'\"paren() dash-",
     "The quick, brown fox! AND the (lazy) dog.", "der Der DER und 'und' nicht?",
     "le la  les\tet\nest que", "the-fox and_dog the. the", "   ", "x\n\n\ny",
+    "the quick brown fox jumps over the lazy dog", "the the the the",
+    "   \n\t ", "\u00e7\u00fc\u00e9 \u6f22\u5b57 mixed UNICODE words",
+    "\tleading and trailing\n", "a b c d e", "one", "  x \t y \x0b z ",
+    "rep rep rep rep", "Mixed CASE mixed case", "the quick brown fox",
+    "novel words only here", "the quick", "THE QUICK BROWN cat",
+    "The quick brown fox jumps over the lazy dog", "the THE tHe", "word",
+    "   \t\n", "unicode na\u00efve caf\u00e9 tokens", "a b c d", "  x \t y  ",
 ]
 
 
@@ -101,17 +110,42 @@ def test_token_codes_degenerate_batches():
         assert len(rows) == len(codes) == len(uniques) == 0
 
 
+def _case_tokens():
+    """``""`` plus every raw and lowered CASES token, once each."""
+    return [""] + list(dict.fromkeys(
+        w for t in CASES for lower in (False, True) for w in _toks(t, lower)
+    ))
+
+
 @pytest.mark.parametrize("hexchars", [4, 8, 15])
 @pytest.mark.parametrize("suffix", ["", "#3"])
 def test_md5_prefix_matches_hashlib(hexchars, suffix):
-    strings = [""] + list(dict.fromkeys(
-        w for t in CASES for lower in (False, True) for w in _toks(t, lower)
-    ))
+    strings = _case_tokens()
     got = AH.md5_prefix(strings, suffix, hexchars)
     assert got.dtype == np.int64
     assert got.tolist() == [_md5(w + suffix, hexchars) for w in strings]
     empty = AH.md5_prefix([], suffix, hexchars)
     assert empty.dtype == np.int64 and empty.shape == (0,)
+
+
+@pytest.mark.parametrize("suffix", ["", "#3"])
+def test_md5_prefix_matches_spark_and_duckdb(spark, suffix):
+    """The Spark Column (``dedup._h32``) and DuckDB spellings of the md5
+    contract equal the Python one byte for byte (UTF-8, NUL, case folds
+    that change length), at 8 hex digits and at 15 (the simhash/winnow
+    word hash)."""
+    import duckdb
+
+    strings = _case_tokens()
+    df = spark.createDataFrame(list(enumerate(strings)), "i int, s string")
+    spark_h = df.orderBy("i").select(_h32(F.col("s"), suffix).alias("h")).collect()
+    assert [r.h for r in spark_h] == AH.md5_prefix(strings, suffix, 8).tolist()
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(strings)), "s": strings}))
+    for n in (8, 15):
+        sql = f"SELECT ('0x' || substr(md5(s || ?), 1, {n}))::BIGINT FROM t ORDER BY i"
+        duck_h = [r[0] for r in con.execute(sql, [suffix]).fetchall()]
+        assert duck_h == AH.md5_prefix(strings, suffix, n).tolist(), n
 
 
 @pytest.mark.parametrize("hexchars", [0, 16])
@@ -153,6 +187,28 @@ _STRIP = str.maketrans("", "", PUNCT_STRIP)
 def _standin_weight(tok: str) -> int:
     b = _md5(f"{tok}#qw1", 8) % 65536
     return _md5(f"w{b}#qw1", 8) % 2001 - 1000
+
+
+def k_ngrams(texts, env):
+    out = [[] for _ in range(len(texts))]
+    for n in (2, 3, 5):
+        ordered = env.udf(word_ngrams_arrow, n)(texts)
+        distinct = env.udf(word_ngrams_arrow, n, True)(texts)
+        for row, o, d in zip(out, ordered, distinct):
+            row.append((list(o), sorted(d)))
+    return out
+
+
+def r_ngrams(texts, _):
+    out = []
+    for t in texts:
+        toks = _toks(t)
+        row = []
+        for n in (2, 3, 5):
+            grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+            row.append((grams, sorted(set(grams))))
+        out.append(row)
+    return out
 
 
 def k_token_stats(texts, _):
@@ -339,6 +395,7 @@ KERNELS = {
     "minhash": (k_minhash, r_minhash),
     "simhash": (k_simhash, r_simhash),
     "wordset": (k_wordset, r_wordset),
+    "ngrams": (k_ngrams, r_ngrams),
     "classifier_standin": (k_classifier_standin, r_classifier_standin),
     "classifier_weights": (k_classifier_weights, r_classifier_weights),
     "distill": (k_distill, r_distill),
