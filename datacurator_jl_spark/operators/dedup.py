@@ -289,12 +289,9 @@ def _drop_over_cap(
     is unchanged (the prefilter='auto' histogram excludes NULL blocks
     for the same reason).
 
-    Caller contract (round 6): MATERIALIZE the input first when its
-    lineage carries a UDF — this guard has two consumers (counts +
-    probe) and would re-run the lineage per consumer. For self-joins,
-    cap ONE side only: a pair needs its key on both sides, so an a-side
-    drop already kills every over-cap bucket's pairs, and the cap join
-    runs once instead of twice.
+    Callers: ``_capped_self_join`` (the pair generators' one skew
+    policy, which states the materialize-first, one-side-only contract),
+    ``_bucket_star_edges`` and ``similarity.semdedup_survivors``.
 
     ``broadcast_ok`` (round-7): hint the under-cap key set for
     broadcast. Pass True ONLY when the caller has PROVED ``df`` (and
@@ -324,13 +321,40 @@ def _rows_per_band(width: int, bands: int, name: str = "k") -> int:
     return width // bands
 
 
-def _band_buckets(
-    sig: DataFrame, k: int, bands: int, max_bucket: int | None = None
+def _capped_self_join(
+    frame: DataFrame, keys: list[str], cap: int | None, id_col: str = "doc"
 ) -> DataFrame:
+    """The one guarded keyed self-join behind every pair generator here
+    and in ``similarity``/``winnow``: rows of ``frame`` that share
+    ``keys``, aliased ``a`` and ``b``, each unordered pair once
+    (``a.<id_col> < b.<id_col>``). The caller projects its own per-pair
+    expression from ``a.*`` and ``b.*``.
+
+    The skew policy lives here and nowhere else (*DS2*, ICDE 2021: one
+    hot join key serializes the whole pair stage):
+
+    - ``frame`` must already be MATERIALIZED (``_materialize``): it
+      feeds the cap's count, the capped side and the uncapped side, and
+      would otherwise re-run its lineage, UDFs included, per consumer;
+    - a key group larger than ``cap`` yields no pairs.
+      ``_drop_over_cap`` runs on the ``a`` side only: a pair needs its
+      key on both sides, so one capped side already drops the group's
+      pairs, and the cap join runs once. A falsy ``cap`` (None or 0)
+      disables the guard;
+    - NULL keys never pair (an equi-join never matches NULL)."""
+    a = _drop_over_cap(frame, keys, cap) if cap else frame
+    return (
+        a.alias("a")
+        .join(frame.alias("b"), keys)
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    )
+
+
+def _band_buckets(sig: DataFrame, k: int, bands: int) -> DataFrame:
     """Explode a signature table (``doc``, ``mh0..mh{k-1}``, plus any
     passthrough columns, which are carried) into (doc, band, key, ...)
-    LSH bucket rows; ``max_bucket`` drops degenerate buckets via the
-    shared ``_drop_over_cap`` guard.
+    LSH bucket rows. Callers cap degenerate buckets through
+    ``_capped_self_join`` or ``_bucket_star_edges``.
 
     The bucket key is ``xxhash64`` over the band's minhash lanes —
     64-bit ON PURPOSE (round 6): a band key only approximates
@@ -354,12 +378,38 @@ def _band_buckets(
                 F.lit(b).alias("band"), F.xxhash64(*cols).alias("key")
             ).alias(f"b{b}")
         )
-    buckets = sig.select(
+    return sig.select(
         "doc", *extra, F.explode(F.array(*band_cols)).alias("bk")
     ).select("doc", *extra, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if max_bucket:
-        buckets = _drop_over_cap(buckets, ["band", "key"], max_bucket)
-    return buckets
+
+
+def _signatures(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """(doc, mh0..mh{k-1}) for every doc with a signature — the body of
+    ``signature_table``, private so the batch operators do not call
+    through the public name.
+
+    Token-less docs (empty/whitespace-only/NULL text) have NULL minhash
+    lanes — all k lanes together. A band hash maps NULL lanes to a
+    regular value, so without this filter every blank doc would land in
+    ONE shared bucket and pair with unrelated blanks. The DuckDB oracle
+    joins on raw mh equality where NULL never equals NULL, so the pinned
+    semantics are: no signature -> no candidacy. Filtering before the
+    band explode also kills the worst-case degenerate bucket."""
+    sig = minhash_signature(df.select(id_col, text_col), text_col, k)
+    return sig.filter(F.col("mh0").isNotNull()).select(
+        F.col(id_col).alias("doc"), *[f"mh{i}" for i in range(k)]
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Distinct (id_a, id_b) doc pairs sharing >= 1 LSH bucket."""
+    return (
+        _capped_self_join(buckets, ["band", "key"], max_bucket)
+        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .distinct()
+    )
 
 
 def lsh_candidate_pairs(
@@ -375,45 +425,13 @@ def lsh_candidate_pairs(
 
     shingle -> minhash -> band -> bucket equi-join (the scale path: the
     only shuffle is on band keys). ``max_bucket`` drops degenerate
-    buckets (skew guard). Pairs are distinct with id_a < id_b.
-    ``materialize`` picks the durability of the bucket frame (see
-    ``_materialize``; default executor-local).
+    buckets (the ``_capped_self_join`` skew guard). Pairs are distinct
+    with id_a < id_b. ``materialize`` picks the durability of the
+    bucket frame (see ``_materialize``; default executor-local).
     """
-    sig = minhash_signature(df.select(id_col, text_col), text_col, k)
-    # Token-less docs (empty/whitespace-only/NULL text) have NULL minhash
-    # lanes — all k lanes together. F.hash maps NULL lanes to a regular
-    # int, so without this filter every blank doc lands in ONE shared
-    # bucket and pairs with unrelated blanks. The DuckDB oracle joins on
-    # raw mh equality where NULL never equals NULL, so the pinned
-    # semantics are: no signature -> no candidacy. Filter before the
-    # band explode (also kills the worst-case degenerate bucket).
-    sig = sig.filter(F.col("mh0").isNotNull())
-    buckets = _band_buckets(
-        sig.select(F.col(id_col).alias("doc"), *[f"mh{i}" for i in range(k)]),
-        k,
-        bands,
-        max_bucket=None,
-    )
-    # materialize BEFORE capping: _drop_over_cap has two consumers
-    # (counts + probe), and capping first would run the signature UDF +
-    # explode once per consumer. Post-materialize, the cap is applied to
-    # ONE side of the self-join only — output-identical (a pair needs
-    # its bucket key on BOTH sides, so an a-side drop kills the bucket's
-    # pairs outright) and the cap join itself runs once, not twice.
-    buckets = _materialize(buckets, materialize)
-    capped = (
-        _drop_over_cap(buckets, ["band", "key"], max_bucket)
-        if max_bucket
-        else buckets
-    )
-    a = capped.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
+    sig = _signatures(df, id_col, text_col, k)
+    buckets = _materialize(_band_buckets(sig, k, bands), materialize)
+    return _bucket_pairs(buckets, max_bucket)
 
 
 def simhash(
@@ -486,9 +504,9 @@ def _bucket_star_edges(
     which also puts the graph under the driver union-find bound; at
     100 TB it removes the quadratic term from every components run).
     Only valid for component-finding — pair-SCORING ops (Jaccard,
-    containment, hamming) still need the real pairs. Cap semantics
-    unchanged: an over-cap bucket is dropped wholesale, exactly what
-    the one-side-capped self-join produced."""
+    containment, hamming) still need the real pairs. Cap semantics are
+    ``_capped_self_join``'s: an over-cap bucket is dropped wholesale,
+    and ``buckets`` must be materialized."""
     capped = (
         _drop_over_cap(buckets, ["band", "key"], max_bucket)
         if max_bucket
@@ -527,17 +545,8 @@ def near_dup_components(
     partial-agg min, O(diameter) shuffles, ``localCheckpoint``
     truncating per-round lineage (see ``_propagate_min_labels``).
     """
-    sig = minhash_signature(df.select(id_col, text_col), text_col, k)
-    sig = sig.filter(F.col("mh0").isNotNull())
-    buckets = _materialize(
-        _band_buckets(
-            sig.select(F.col(id_col).alias("doc"), *[f"mh{i}" for i in range(k)]),
-            k,
-            bands,
-            max_bucket=None,
-        ),
-        materialize,
-    )
+    sig = _signatures(df, id_col, text_col, k)
+    buckets = _materialize(_band_buckets(sig, k, bands), materialize)
     pairs = _bucket_star_edges(buckets, max_bucket)
     return components_from_pairs(
         pairs, df.select(F.col(id_col).alias("doc")), max_iter, materialize
@@ -557,16 +566,24 @@ def components_from_pairs(
     (singletons included); output (doc, comp) with comp = component-min
     id. O(diameter) min-label propagation rounds; the edge list — the
     expensive artifact — honors the ``materialize`` durability policy."""
+    labels = universe.select("doc").distinct().withColumn("comp", F.col("doc"))
+    return _components(pairs, labels, max_iter, materialize)
+
+
+def _components(
+    pairs: DataFrame, labels: DataFrame, max_iter: int, materialize: str
+) -> DataFrame:
+    """The one components step: the undirected edge union of ``pairs``
+    (id_a, id_b) and the initial ``labels`` (doc, comp — scalar or
+    struct) are materialized, then min-label propagation runs to
+    fixpoint (``_propagate_min_labels``)."""
     edges = _materialize(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionAll(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         ),
         materialize,
     )
-    labels = _materialize(
-        universe.select("doc").distinct().withColumn("comp", F.col("doc")),
-        materialize,
-    )
+    labels = _materialize(labels, materialize)
     return _propagate_min_labels(edges, labels, max_iter, materialize)
 
 
@@ -647,7 +664,6 @@ def _propagate_min_labels(
     labels: DataFrame,
     max_iter: int,
     materialize: str,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Iterative min-label propagation to fixpoint over ``edges``
     (src, dst — both directions present) starting from ``labels``
@@ -658,14 +674,10 @@ def _propagate_min_labels(
     Scale-adaptive (round-7): a bounded ``limit(n+1).count()`` probe of
     the (already materialized) edge frame routes provably small edge
     sets to :func:`_propagate_driver` — same fixpoint, one job instead
-    of O(diameter) join rounds. ``driver_max_edges``: None reads the
-    module default ``DRIVER_COMPONENTS_MAX_EDGES`` at call time
-    (patchable in tests); 0 disables the driver path outright."""
-    limit = (
-        DRIVER_COMPONENTS_MAX_EDGES
-        if driver_max_edges is None
-        else driver_max_edges
-    )
+    of O(diameter) join rounds. The bound is the module constant
+    ``DRIVER_COMPONENTS_MAX_EDGES``, read at call time; 0 disables the
+    driver path."""
+    limit = DRIVER_COMPONENTS_MAX_EDGES
     if limit:
         probe = edges.limit(int(limit) + 1).count()
         if probe <= limit:
@@ -756,20 +768,9 @@ def estimate_jaccard_pairs(
     # ONE signature pass: band the materialized signature table directly
     # (lsh_candidate_pairs would re-derive its own signature from the
     # raw text — doubling the dominant md5-minhash cost)
-    sig = _materialize(
-        signature_table(df, id_col, text_col, k), materialize
-    )
-    buckets = _materialize(
-        _band_buckets(sig.select("doc", *[f"mh{i}" for i in range(k)]),
-                      k, bands, max_bucket=max_bucket),
-        materialize,
-    )
-    ba, bb = buckets.alias("ba"), buckets.alias("bb")
-    pairs = (
-        ba.join(bb, ["band", "key"])
-        .filter(F.col("ba.doc") < F.col("bb.doc"))
-        .select(F.col("ba.doc").alias("id_a"), F.col("bb.doc").alias("id_b"))
-        .distinct()
+    sig = _materialize(_signatures(df, id_col, text_col, k), materialize)
+    pairs = _bucket_pairs(
+        _materialize(_band_buckets(sig, k, bands), materialize), max_bucket
     )
     a, b = sig.alias("a"), sig.alias("b")
     eq = sum(
@@ -784,6 +785,21 @@ def estimate_jaccard_pairs(
             F.round(eq.cast("double") / k, 6).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= float(threshold))
+    )
+
+
+def _wordsets(
+    df: DataFrame, id_col: str, text_col: str, block_col: str
+) -> DataFrame:
+    """(id, blk, ws) — the hashed distinct word set (``_h32`` ints,
+    Arrow-batched) per doc: the shuffle payload of the blocked Jaccard
+    and containment self-joins."""
+    from datacurator_jl_spark.functions.arrow_hash import hashed_wordset_arrow
+
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.col(block_col).alias("blk"),
+        hashed_wordset_arrow(F.col(text_col)).alias("ws"),
     )
 
 
@@ -815,18 +831,7 @@ def ngram_containment_pairs(
     (id_a, id_b, containment rounded to 6dp) with id_a < id_b,
     containment >= threshold; token-less docs never pair (min size 0).
     """
-    from datacurator_jl_spark.functions.arrow_hash import hashed_wordset_arrow
-
-    prep = df.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("blk"),
-        hashed_wordset_arrow(F.col(text_col)).alias("ws"),
-    )
-    # materialize-then-cap, one side of the self-join only (see
-    # lsh_candidate_pairs): the Arrow wordset UDF runs once, the cap
-    # join once, and the pair set is identical
-    prep = _materialize(prep, materialize)
-    a_src = _drop_over_cap(prep, ["blk"], max_block) if max_block else prep
+    prep = _materialize(_wordsets(df, id_col, text_col, block_col), materialize)
     # project the intersect size ONCE per pair (round-7, guide §1.2
     # step 2): inlining it into the containment expression lets the
     # pushed-down threshold filter duplicate the whole expression, so
@@ -834,16 +839,11 @@ def ngram_containment_pairs(
     # pair. A multi-referenced non-cheap alias is NOT collapsed into
     # its consumers (CollapseProject), so ``_i`` is computed exactly
     # once; the arithmetic above it is integer-cheap. Values unchanged.
-    proj = (
-        a_src.alias("a")
-        .join(prep.alias("b"), F.col("a.blk") == F.col("b.blk"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws"))).alias("_i"),
-            F.least(F.size(F.col("a.ws")), F.size(F.col("b.ws"))).alias("_mn"),
-        )
+    proj = _capped_self_join(prep, ["blk"], max_block, "id").select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws"))).alias("_i"),
+        F.least(F.size(F.col("a.ws")), F.size(F.col("b.ws"))).alias("_mn"),
     )
     cont = F.when(
         F.col("_mn") > 0, F.col("_i").cast("double") / F.col("_mn")
@@ -873,18 +873,10 @@ def drop_contained_docs(
     need the winner to survive (chains A⊂B⊂C drop A and B in one pass).
 
     Same scale posture as ``ngram_containment_pairs`` (blocked join +
-    ``max_block``); the victim set is distinct ids only, applied as a
-    left-anti join.
+    ``max_block``: an over-cap block drops no doc); the victim set is
+    distinct ids only, applied as a left-anti join.
     """
-    from datacurator_jl_spark.functions.arrow_hash import hashed_wordset_arrow
-
-    prep = df.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("blk"),
-        hashed_wordset_arrow(F.col(text_col)).alias("ws"),
-    )
-    prep = _materialize(prep, materialize)
-    a_src = _drop_over_cap(prep, ["blk"], max_block) if max_block else prep
+    prep = _materialize(_wordsets(df, id_col, text_col, block_col), materialize)
     na, nb = F.size(F.col("a.ws")), F.size(F.col("b.ws"))
     inter = F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws")))
     mn = F.least(na, nb)
@@ -892,9 +884,8 @@ def drop_contained_docs(
         F.when(mn > 0, inter.cast("double") / mn).otherwise(F.lit(0.0)), 6
     )
     victims = (
-        prep.alias("a")
-        .join(prep.alias("b"), F.col("a.blk") == F.col("b.blk"))
-        .filter((F.col("a.id") < F.col("b.id")) & (cont >= float(threshold)))
+        _capped_self_join(prep, ["blk"], max_block, "id")
+        .filter(cont >= float(threshold))
         .select(
             F.when(na < nb, F.col("a.id"))
             .when(nb < na, F.col("b.id"))
@@ -915,10 +906,7 @@ def signature_table(
     this table (parquet/Iceberg) after each ingest; the next ingest
     dedups against it via ``incremental_near_dup_survivors`` without
     re-signing or re-clustering the accumulated corpus."""
-    sig = minhash_signature(df.select(id_col, text_col), text_col, k)
-    return sig.filter(F.col("mh0").isNotNull()).select(
-        F.col(id_col).alias("doc"), *[f"mh{i}" for i in range(k)]
-    )
+    return _signatures(df, id_col, text_col, k)
 
 
 def incremental_near_dup_survivors(
@@ -942,7 +930,7 @@ def incremental_near_dup_survivors(
     ingest costs O(|batch| + |corpus| band keys) with NO re-shingling of
     the corpus text and NO re-clustering of base-base pairs (their
     components were already resolved when those docs were admitted;
-    base-base edges are explicitly excluded from the join).
+    only buckets that hold a new doc are banded, see the prune below).
 
     Winner semantics, pinned: labels are (rank, id) structs with base
     rank 0 < new rank 1, so min-label propagation makes any component
@@ -950,45 +938,31 @@ def incremental_near_dup_survivors(
     component label is (1, its own id). Base docs always survive (they
     are already in the corpus and are not returned).
 
-    Round-6 base-side prune: base-base pairs are excluded by
-    construction, so a base bucket row can only ever pair if its
+    Round-6 base-side prune: a bucket without a new doc cannot change
+    any new doc's survival, so a base bucket row only matters if its
     (band, key) also occurs in the NEW batch's buckets. The base
     signature table is therefore LEFT-SEMI pruned on the batch's band
-    keys BEFORE the union/cap/self-join — at corpus scale this turns
-    "shuffle every base signature into the pair join" into "scan the
-    base table against a batch-sized key set" (AQE broadcasts the key
+    keys BEFORE the union, the cap and the star edges — at corpus scale
+    this turns "shuffle every base signature into the pair join" into
+    "scan the base table against a batch-sized key set" (AQE broadcasts the key
     side for any realistic batch, so the base side never shuffles at
     all; past broadcast size, Spark's runtime bloom-filter join
     pruning — spark.sql.optimizer.runtime.bloomFilter.enabled — covers
-    the same pattern approximately). Output-identical: pairs need a key
-    on both sides, and for every key the batch holds, the pruned union
-    carries exactly the rows the full union did, so ``max_bucket``
-    counts and drop decisions are unchanged too.
+    the same pattern approximately). Output-identical: for every key
+    the batch holds, the pruned union carries exactly the rows the full
+    union did, so ``max_bucket`` counts and drop decisions are
+    unchanged too.
     """
-    new_sigs = signature_table(new_df, id_col, text_col, k)
     # materialize the batch buckets: minhash lineage carries the Arrow
     # hash stage, and the buckets feed two consumers (union + key set)
     new_buckets = _materialize(
-        _band_buckets(
-            new_sigs.select(
-                "doc", *[f"mh{i}" for i in range(k)], F.lit(False).alias("is_base")
-            ),
-            k,
-            bands,
-        ),
+        _band_buckets(signature_table(new_df, id_col, text_col, k), k, bands),
         materialize,
     )
     base_buckets = _band_buckets(
-        base_sigs.select(
-            "doc", *[f"mh{i}" for i in range(k)], F.lit(True).alias("is_base")
-        ),
-        k,
-        bands,
+        base_sigs.select("doc", *[f"mh{i}" for i in range(k)]), k, bands
     ).join(new_buckets.select("band", "key").distinct(), ["band", "key"], "left_semi")
-    buckets = new_buckets.unionByName(base_buckets.select(*new_buckets.columns))
-    if max_bucket:
-        buckets = _drop_over_cap(buckets, ["band", "key"], max_bucket)
-    buckets = _materialize(buckets, materialize)
+    buckets = _materialize(new_buckets.unionByName(base_buckets), materialize)
     # round-7: STAR edges per bucket (see _bucket_star_edges) replace
     # the Σ b² pair self-join. The old graph excluded base-base EDGES;
     # the star may link two base docs directly — but only inside a
@@ -999,33 +973,22 @@ def incremental_near_dup_survivors(
     # survivor set, the operator's output — is identical; at worst two
     # base-ROOTED components merge, which cannot flip any component's
     # rank-0/rank-1 rootedness.
-    pairs = _bucket_star_edges(buckets, None)
-    edges = _materialize(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionAll(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        ),
-        materialize,
-    )
+    pairs = _bucket_star_edges(buckets, max_bucket)
     # labels start from EVERY new doc (not just the signed ones): a
     # token-less doc has no signature, hence no edges, hence survives —
     # the pinned "no signature -> no candidacy" semantics
-    labels = _materialize(
-        base_sigs.select(
+    labels = base_sigs.select(
+        "doc",
+        F.struct(F.lit(0).alias("rank"), F.col("doc").alias("id")).alias("comp"),
+    ).unionByName(
+        new_df.select(F.col(id_col).alias("doc"))
+        .distinct()
+        .select(
             "doc",
-            F.struct(F.lit(0).alias("rank"), F.col("doc").alias("id")).alias("comp"),
-        ).unionByName(
-            new_df.select(F.col(id_col).alias("doc"))
-            .distinct()
-            .select(
-                "doc",
-                F.struct(F.lit(1).alias("rank"), F.col("doc").alias("id")).alias(
-                    "comp"
-                ),
-            )
-        ),
-        materialize,
+            F.struct(F.lit(1).alias("rank"), F.col("doc").alias("id")).alias("comp"),
+        )
     )
-    labels = _propagate_min_labels(edges, labels, max_iter, materialize)
+    labels = _components(pairs, labels, max_iter, materialize)
     survivors = labels.filter(
         (F.col("comp.rank") == 1) & (F.col("comp.id") == F.col("doc"))
     ).select("doc")
@@ -1093,9 +1056,9 @@ def ngram_jaccard_pairs(
 
     Skew guards (round-3, VERDICT #1 — Σ block² is the scale-killer):
 
-    - ``max_block`` drops blocks larger than the cap BEFORE the self-join
-      (the shared ``_drop_over_cap`` groupBy-count + semi-join guard,
-      same as ``lsh_candidate_pairs``'s ``max_bucket``). A mega-block (one domain = 10⁷ docs) would emit
+    - ``max_block``: a block larger than the cap yields no pairs (the
+      ``_capped_self_join`` guard, same as ``lsh_candidate_pairs``'s
+      ``max_bucket``). A mega-block (one domain = 10⁷ docs) would emit
       ~5·10¹³ pairs on a single join key; AQE skew-split only shares
       that pain, it cannot shrink the pair count. Default 100k keeps
       test-scale output byte-identical while bounding any block at
@@ -1127,28 +1090,23 @@ def ngram_jaccard_pairs(
 
     Output: (id_a, id_b, jaccard rounded to 6dp) where jaccard >= threshold.
     """
-    from datacurator_jl_spark.functions.arrow_hash import hashed_wordset_arrow
-
-    prep = df.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("blk"),
-        hashed_wordset_arrow(F.col(text_col)).alias("ws"),
-    )
-    prep = prep.withColumn("ns", F.size("ws"))
     if prefilter not in ("auto", "none", "lsh"):
         raise ValueError(f"prefilter must be auto|none|lsh, got {prefilter!r}")
-
     # materialize ONCE: both self-join branches would otherwise re-scan
     # the source and re-run the signature UDF (the materialized frame —
     # id, block, hashed set — is a small fraction of the text it derives
     # from; at warehouse scale this is the persisted signature table)
+    prep = _materialize(
+        _wordsets(df, id_col, text_col, block_col).withColumn("ns", F.size("ws")),
+        materialize,
+    )
+    cap = max_block
     if prefilter == "auto":
         # decide AFTER materializing: the block histogram is then a
         # near-free scan of the persisted signature frame, not a second
         # pass over text. One aggregate yields BOTH selection inputs —
         # total docs and the largest block (block-shape awareness: an
         # over-cap hot block routes to LSH instead of being dropped).
-        prep = _materialize(prep, materialize)
         # NULL block keys never pair in EITHER path (both joins are blk
         # equi-joins), so they must not count toward the largest-block
         # statistic — a big NULL block would needlessly route a
@@ -1173,13 +1131,7 @@ def ngram_jaccard_pairs(
         # proved every block <= max_block, so the cap is a guaranteed
         # no-op — which also removes round 4's double-materialize (and
         # its orphaned dc-mat-* dir, ADVICE r4).
-        cap_a = False
-    else:
-        prep = _materialize(prep, materialize)
-        # materialize-then-cap, one self-join side only (round 6, see
-        # lsh_candidate_pairs): capping before the materialize would run
-        # the Arrow wordset UDF once per _drop_over_cap consumer
-        cap_a = bool(max_block) and prefilter == "none"
+        cap = None
     inter = F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws")))
     # size-ratio prefilter (semantics-preserving): J(a,b) <= min/max, so
     # J >= t forces t*|b| <= |a| <= |b|/t — prunes pairs BEFORE the
@@ -1209,12 +1161,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("a.blk") == F.col("b.blk"))
         )
     else:
-        a_src = _drop_over_cap(prep, ["blk"], max_block) if cap_a else prep
-        joined = (
-            a_src.alias("a")
-            .join(prep.alias("b"), F.col("a.blk") == F.col("b.blk"))
-            .filter(F.col("a.id") < F.col("b.id"))
-        )
+        joined = _capped_self_join(prep, ["blk"], cap, "id")
     # project the intersect size ONCE per pair (round-7, guide §1.2
     # step 2): the Jaccard expression references it three times (union
     # twice + numerator) and the pushed-down threshold filter

@@ -276,23 +276,26 @@ def srp_near_dup_pairs(
     distance <= ``max_hamming``. Shuffle payload: (id, band value,
     signature) — three longs per row per band.
 
-    Skew guard: ``max_bucket`` drops (band, val) buckets larger than the
-    cap before the self-join — a degenerate bucket (e.g. many null/zero
-    embeddings all collapsing to signature 0, or one dense cluster
-    pinning a band value) would otherwise contribute O(bucket²) pairs,
-    the unbounded join every other pair generator here already caps.
-    ``materialize`` picks the durability of the bucket frame (same
-    policy as ``lsh_candidate_pairs``: ``local`` | ``reliable`` |
-    a directory path for a persisted parquet signature table).
+    Skew guard: a (band, val) bucket larger than ``max_bucket`` yields
+    no pairs (``dedup._capped_self_join``, the one pair-generator skew
+    policy) — a degenerate bucket (e.g. many zero embeddings all
+    collapsing to signature 0, or one dense cluster pinning a band
+    value) would otherwise contribute O(bucket²) pairs. ``materialize``
+    picks the durability of the bucket frame (``local`` | ``reliable``
+    | a directory path for a persisted parquet signature table).
     """
-    from datacurator_jl_spark.operators.dedup import _materialize, _rows_per_band
+    from datacurator_jl_spark.operators.dedup import (
+        _capped_self_join,
+        _materialize,
+        _rows_per_band,
+    )
 
     rows = _rows_per_band(bits, bands, "bits")
     mask = (1 << rows) - 1
     sig = srp_signature(df.select(id_col, emb_col), emb_col, dim, bits, seed)
     # Null/ragged embeddings have NULL signatures (srp_signature) — they
     # carry no projection information, so like MinHash's null-lane rule
-    # (dedup.py lsh_candidate_pairs): no signature -> no candidacy.
+    # (dedup._signatures): no signature -> no candidacy.
     # A LEGITIMATE signature 0 (all dots <= 0, e.g. identical zero
     # vectors) keeps candidacy; the max_bucket cap still bounds any
     # degenerate pile-up of such rows.
@@ -304,28 +307,17 @@ def srp_near_dup_pairs(
         ).alias(f"b{b}")
         for b in range(bands)
     ]
-    buckets = sig.select(
-        F.col(id_col).alias("doc"),
-        F.col("srp_sig").alias("sig"),
-        F.explode(F.array(*band_structs)).alias("bk"),
-    ).select("doc", "sig", F.col("bk.band").alias("band"), F.col("bk.val").alias("val"))
-    # materialize BEFORE capping (round 6, see lsh_candidate_pairs):
-    # the self-join — and _drop_over_cap's two consumers — would
-    # otherwise run the projection UDF once per branch. The cap applies
-    # to ONE side of the self-join only: output-identical (a pair needs
-    # its bucket on both sides), and the cap join runs once.
-    buckets = _materialize(buckets, materialize)
-    if max_bucket:
-        from datacurator_jl_spark.operators.dedup import _drop_over_cap
-
-        capped = _drop_over_cap(buckets, ["band", "val"], max_bucket)
-    else:
-        capped = buckets
-    a, b = capped.alias("a"), buckets.alias("b")
+    buckets = _materialize(
+        sig.select(
+            F.col(id_col).alias("doc"),
+            F.col("srp_sig").alias("sig"),
+            F.explode(F.array(*band_structs)).alias("bk"),
+        ).select("doc", "sig", F.col("bk.band").alias("band"), F.col("bk.val").alias("val")),
+        materialize,
+    )
     ham = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
     return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("a.doc") < F.col("b.doc"))
+        _capped_self_join(buckets, ["band", "val"], max_bucket)
         .select(
             F.col("a.doc").alias("id_a"),
             F.col("b.doc").alias("id_b"),
@@ -548,7 +540,6 @@ def kmeans_fit(
     k: int = 8,
     iters: int = 2,
     materialize: str = "local",
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means over an embedding column; returns
     the centroid table (cid int, centroid array<double>).
@@ -589,11 +580,9 @@ def kmeans_fit(
     # round-7 scale-adaptive route (the driver-components pattern): a
     # bounded limit-probe sends small point sets to the bit-identical
     # numpy twin — one collect instead of ~2 + 3·iters checkpoint/
-    # aggregate rounds (measured: 2.0 s -> ~0.4 s at sf0.1). ``None``
-    # reads the module default; 0 disables the driver path.
-    limit = (
-        DRIVER_KMEANS_MAX_ROWS if driver_max_rows is None else driver_max_rows
-    )
+    # aggregate rounds (measured: 2.0 s -> ~0.4 s at sf0.1). The bound
+    # is the module constant, read at call time; 0 disables the route.
+    limit = DRIVER_KMEANS_MAX_ROWS
     if limit and pts.limit(int(limit) + 1).count() <= limit:
         rows = [(r["doc"], list(r["v"])) for r in pts.collect()]
         fitted = _kmeans_fit_driver(rows, k, iters)
@@ -678,8 +667,9 @@ def semdedup_survivors(
     Scale shape — the same bounded-block family as every pair op here:
     centroids are one explode+groupBy (rows x dim scalars) and ride as
     a broadcast; the pair join is a cluster equi-join with
-    ``_drop_over_cap`` capping degenerate clusters on ONE side (caller
-    materialization contract as in lsh_candidate_pairs); losers
+    ``_drop_over_cap`` capping degenerate clusters on ONE side (the
+    ``dedup._capped_self_join`` policy, kept as its own join here for
+    the broadcast hints below); losers
     anti-join the corpus by id. The clusters themselves come from the
     corpus' ``cluster_col`` (production: offline k-means ids, the IVF
     posture) — this operator never builds an n² term.

@@ -35,8 +35,8 @@ Scale shape: fingerprint extraction is ONE Arrow pass per doc (the
 sliding-window min runs inside the batch, numpy-vectorized — no gram
 explode, no per-gram shuffle, no window function over the corpus);
 each doc ships ~2m/(w+1) bigints. Pair generation is the standard
-bucketed equi-join on the fingerprint value with the shared
-``_drop_over_cap`` guard — identical machinery (and identical skew
+bucketed equi-join on the fingerprint value through the shared
+``dedup._capped_self_join`` guard — identical machinery (and identical skew
 posture) to the LSH band join, because a fingerprint IS a content
 bucket key: a boilerplate passage shared by 10⁷ pages is one hot key,
 and the cap drops the degenerate KEY, not the corpus.
@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 
 from datacurator_jl_spark.functions.arrow_hash import md5_prefix
 from datacurator_jl_spark.functions.tokens import TOKEN_RE
-from datacurator_jl_spark.operators.dedup import _drop_over_cap, _materialize
+from datacurator_jl_spark.operators.dedup import _capped_self_join, _materialize
 from datacurator_jl_spark.operators.dataframe_ops import validate_unique_ids
 
 
@@ -144,10 +144,10 @@ def winnow_candidate_pairs(
     winnowed fingerprints — the shared-passage candidate generator.
 
     Same plan family as ``lsh_candidate_pairs``: materialize the
-    fingerprint table once, cap degenerate fingerprint buckets
-    (``_drop_over_cap`` on ONE self-join side only — a pair needs its
-    fp on both sides, so an a-side drop kills the bucket's pairs), then
-    a fp equi-join + pair count (map-side combinable). ``min_shared``
+    fingerprint table once, self-join it on ``fp`` through
+    ``dedup._capped_self_join`` (a fingerprint bucket over
+    ``max_bucket`` yields no pairs), then a pair count (map-side
+    combinable). ``min_shared``
     > 1 suppresses single-collision noise the way the winnowing paper
     recommends thresholding matched fingerprints."""
     if min_shared < 1:
@@ -157,11 +157,8 @@ def winnow_candidate_pairs(
     fps = _materialize(
         winnow_fingerprint_table(df, id_col, text_col, k, w), materialize
     )
-    a = (_drop_over_cap(fps, ["fp"], max_bucket) if max_bucket else fps).alias("a")
-    b = fps.alias("b")
     return (
-        a.join(b, "fp")
-        .filter(F.col("a.doc") < F.col("b.doc"))
+        _capped_self_join(fps, ["fp"], max_bucket)
         .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
         .agg(F.count("*").alias("shared"))
         .filter(F.col("shared") >= min_shared)

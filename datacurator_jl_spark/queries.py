@@ -2957,9 +2957,9 @@ def d52(spark, sf):
     Jaccard cannot see (a shared 10-line passage inside two otherwise
     unrelated pages moves Jaccard by ~0 but must share a fingerprint).
     Plan family = lsh_candidate_pairs: materialized fingerprint table,
-    `_drop_over_cap` on one self-join side (a boilerplate passage on
+    the `dedup._capped_self_join` fp equi-join (a boilerplate passage on
     10⁷ pages is ONE hot fp key — the cap drops the degenerate KEY),
-    fp equi-join + map-side-combinable pair count. Cap default (1000)
+    map-side-combinable pair count. Cap default (1000)
     cannot bind at sf0.01 (500 docs), so the oracle states the uncapped
     join."""
     from datacurator_jl_spark.operators.winnow import winnow_candidate_pairs

@@ -217,6 +217,45 @@ def domain_quota_batch(
     )
 
 
+def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
+    """The standing state table of an ingest stream, or None before its
+    first epoch has written it.
+
+    FS-agnostic bootstrap (``path`` is S3/HDFS in production, so no
+    os.path probing): ONLY a missing-path read means "empty state" —
+    any other failure (transient S3 error, schema mismatch with the
+    persisted table) raises, or the batch would be admitted wholesale
+    against an empty corpus: silent, permanent duplicate contamination."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+            raise
+        return None
+
+
+def _write_epoch(batch_id: int, writes: list[tuple[DataFrame, str]]) -> None:
+    """Write each (frame, directory) of one micro-batch into its
+    ``_batch_id=N`` partition with DYNAMIC partition overwrite, so a
+    replayed epoch overwrites its own partitions instead of appending
+    duplicates — idempotent per epoch, the parquet analogue of an
+    Iceberg/Delta transactional batch-id sink. The session's overwrite
+    mode is restored afterwards."""
+    spark = writes[0][0].sparkSession
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old_mode = spark.conf.get(key, "static")
+    spark.conf.set(key, "dynamic")
+    try:
+        for frame, path in writes:
+            frame.withColumn("_batch_id", F.lit(int(batch_id))).write.mode(
+                "overwrite"
+            ).partitionBy("_batch_id").parquet(path)
+    finally:
+        spark.conf.set(key, old_mode)
+
+
 def incremental_dedup_stream(
     docs: DataFrame,
     sig_dir: str,
@@ -237,11 +276,9 @@ def incremental_dedup_stream(
     the dedup state is the signature TABLE — k bigints per admitted doc,
     shared with batch jobs, restartable, inspectable — not per-key
     operator state, and the LSH join against it is a batch join per
-    micro-batch. Replay safety: both sinks write into a
-    ``_batch_id=N`` partition with DYNAMIC partition overwrite, so a
-    replayed epoch overwrites its own partition instead of appending
-    duplicates — idempotent per epoch, the parquet analogue of an
-    Iceberg/Delta transactional batch-id sink. (A replayed epoch also
+    micro-batch. Replay safety: both sinks write through
+    ``_write_epoch`` (one ``_batch_id=N`` partition per epoch, dynamic
+    partition overwrite). (A replayed epoch also
     re-reads a signature table that already contains its own prior
     write; self-pairs are excluded by ``a.doc < b.doc`` never matching
     doc==doc, and a true duplicate of the replayed doc under a
@@ -257,20 +294,8 @@ def incremental_dedup_stream(
     )
 
     def step(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # FS-agnostic bootstrap (sig_dir is S3/HDFS in production, so no
-        # os.path probing): ONLY a missing-path read falls back to the
-        # empty base — any other failure (transient S3 error, schema/k
-        # mismatch with the persisted table) must raise, or the batch
-        # would be admitted wholesale against an empty corpus: silent,
-        # permanent duplicate contamination
-        from pyspark.errors import AnalysisException
-
-        try:
-            raw = spark.read.parquet(sig_dir)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
+        raw = _read_state(batch.sparkSession, sig_dir)
+        if raw is None:
             base = signature_table(batch.limit(0), id_col, text_col, k)
         else:
             # raises if the persisted table was written with a smaller k
@@ -278,19 +303,10 @@ def incremental_dedup_stream(
         kept = incremental_near_dup_survivors(
             batch, base, id_col, text_col, k=k, bands=bands
         ).localCheckpoint(eager=True)
-        old_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        _write_epoch(
+            batch_id,
+            [(kept, out_dir), (signature_table(kept, id_col, text_col, k), sig_dir)],
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            kept.withColumn("_batch_id", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).partitionBy("_batch_id").parquet(out_dir)
-            signature_table(kept, id_col, text_col, k).withColumn(
-                "_batch_id", F.lit(int(batch_id))
-            ).write.mode("overwrite").partitionBy("_batch_id").parquet(sig_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
 
     return (
         docs.writeStream.foreachBatch(step)
@@ -318,8 +334,8 @@ def incremental_exact_dedup_stream(
     content hashes to ``hash_dir`` — ~32 bytes per admitted page is the
     whole standing state, shared with batch jobs and inspectable.
 
-    Same ``foreachBatch`` + ``_batch_id`` dynamic-partition-overwrite
-    idempotency as the near-dup stream, with one exact-tier twist: a
+    Same ``foreachBatch`` + ``_write_epoch`` idempotency as the near-dup
+    stream, with one exact-tier twist: a
     replayed epoch re-reads a hash table that already contains its OWN
     prior write, and unlike the near-dup tier (where self-pairs are
     excluded by id), a doc's own hash would drop it on replay —
@@ -334,15 +350,9 @@ def incremental_exact_dedup_stream(
     )
 
     def step(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        from pyspark.errors import AnalysisException
-
-        try:
-            raw = spark.read.parquet(hash_dir)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            base = spark.createDataFrame([], "text_hash string")
+        raw = _read_state(batch.sparkSession, hash_dir)
+        if raw is None:
+            base = batch.sparkSession.createDataFrame([], "text_hash string")
         else:
             base = raw.filter(F.col("_batch_id") != int(batch_id)).select(
                 "text_hash"
@@ -350,19 +360,10 @@ def incremental_exact_dedup_stream(
         kept = incremental_exact_survivors(
             batch, base, id_col, text_col, normalized=normalized
         ).localCheckpoint(eager=True)
-        old_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        _write_epoch(
+            batch_id,
+            [(kept, out_dir), (exact_hash_table(kept, text_col, normalized), hash_dir)],
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            kept.withColumn("_batch_id", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).partitionBy("_batch_id").parquet(out_dir)
-            exact_hash_table(kept, text_col, normalized).withColumn(
-                "_batch_id", F.lit(int(batch_id))
-            ).write.mode("overwrite").partitionBy("_batch_id").parquet(hash_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
 
     return (
         docs.writeStream.foreachBatch(step)

@@ -343,7 +343,7 @@ def main() -> None:
     # pair join no matter how small the batch was. Output asserted
     # identical between the two shapes.
     from datacurator_jl_spark.operators.dedup import (
-        _band_buckets, _materialize, _propagate_min_labels,
+        _band_buckets, _drop_over_cap, _materialize, _propagate_min_labels,
     )
 
     n_base = args.basesigs
@@ -387,8 +387,9 @@ def main() -> None:
             "doc", *[f"mh{i}" for i in range(k)], F.lit(True).alias("is_base")
         ).unionByName(new_s.select(
             "doc", *[f"mh{i}" for i in range(k)], F.lit(False).alias("is_base")))
-        buckets = _materialize(
-            _band_buckets(tagged, k, bands, max_bucket=max_bucket), "local")
+        buckets = _materialize(_drop_over_cap(
+            _band_buckets(tagged, k, bands), ["band", "key"], max_bucket),
+            "local")
         a, b = buckets.alias("a"), buckets.alias("b")
         pairs = (
             a.join(b, ["band", "key"])

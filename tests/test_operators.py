@@ -311,6 +311,73 @@ def test_band_count_must_divide_the_signature(spark, op, bands):
             SIM.srp_near_dup_pairs(df, "vec_id", "embedding", 4, bits=16, bands=bands)
 
 
+# One hot key (docs 1-3) and one cold key (docs 4-5): identical texts,
+# blocks and embeddings within a key, nothing shared across keys (the
+# cold embedding is the hot one negated, so every SRP bit differs).
+_HOT = "alpha bravo charlie delta echo foxtrot golf hotel"
+_COLD = "india juliet kilo lima mike november oscar papa"
+_VEC = [1.0, 0.5, -0.25, 2.0]
+_SKEW_ROWS = [(i, "hot", _HOT, _VEC) for i in (1, 2, 3)] + [
+    (i, "cold", _COLD, [-x for x in _VEC]) for i in (4, 5)
+]
+
+
+def _pairs(df):
+    return {(r["id_a"], r["id_b"]) for r in df.collect()}
+
+
+def _victims(df, cap):
+    kept = DD.drop_contained_docs(df, "id", "text", "blk", max_block=cap)
+    return {1, 2, 3, 4, 5} - {r["id"] for r in kept.collect()}
+
+
+def _winnow_pairs(df, cap):
+    from datacurator_jl_spark.operators.winnow import winnow_candidate_pairs
+
+    return _pairs(winnow_candidate_pairs(df, "id", "text", min_shared=1, max_bucket=cap))
+
+
+#: every keyed self-join pair generator, as (frame, cap) -> pairs (or,
+#: for drop_contained_docs, victims)
+PAIR_GENERATORS = {
+    "lsh_candidate_pairs": lambda df, cap: _pairs(
+        DD.lsh_candidate_pairs(df, "id", "text", max_bucket=cap)
+    ),
+    "estimate_jaccard_pairs": lambda df, cap: _pairs(
+        DD.estimate_jaccard_pairs(df, "id", "text", max_bucket=cap)
+    ),
+    "ngram_containment_pairs": lambda df, cap: _pairs(
+        DD.ngram_containment_pairs(df, "id", "text", "blk", max_block=cap)
+    ),
+    "drop_contained_docs": _victims,
+    "ngram_jaccard_pairs": lambda df, cap: _pairs(
+        DD.ngram_jaccard_pairs(df, "id", "text", "blk", max_block=cap, prefilter="none")
+    ),
+    "srp_near_dup_pairs": lambda df, cap: _pairs(
+        SIM.srp_near_dup_pairs(df, "id", "emb", 4, max_bucket=cap)
+    ),
+    "winnow_candidate_pairs": _winnow_pairs,
+}
+
+
+@pytest.mark.parametrize("name", sorted(PAIR_GENERATORS))
+def test_over_cap_key_yields_no_pairs(spark, name):
+    """The skew cap of every pair generator: a key one row over the cap
+    yields no pairs (or victims), a key under it is unchanged, and a key
+    exactly at the cap still pairs."""
+    df = spark.createDataFrame(
+        _SKEW_ROWS, "id long, blk string, text string, emb array<double>"
+    )
+    if name == "drop_contained_docs":
+        hot, cold = {2, 3}, {5}  # identical sets: the larger id loses
+    else:
+        hot, cold = {(1, 2), (1, 3), (2, 3)}, {(4, 5)}
+    run = PAIR_GENERATORS[name]
+    assert run(df, None) == hot | cold
+    assert run(df, 3) == hot | cold
+    assert run(df, 2) == cold
+
+
 def test_line_ratio_heuristics_edges(spark):
     from datacurator_jl_spark.functions import text as X
 

@@ -113,26 +113,6 @@ def _jaccard_corpus(spark, mega: int = 30, small: int = 4):
     return spark.createDataFrame(rows, "doc_id string, text string, source string")
 
 
-def test_max_block_caps_mega_blocks(spark):
-    df = _jaccard_corpus(spark)
-    uncapped = DD.ngram_jaccard_pairs(
-        df, "doc_id", "text", "source", 0.5, max_block=None
-    )
-    assert uncapped.count() == 30 * 29 // 2 + 4 * 3 // 2
-    # explicit exact path: round-5's block-shape-aware "auto" would
-    # instead route an over-cap block to LSH (see
-    # test_auto_prefilter_is_block_shape_aware); the drop-wholesale cap
-    # semantics pinned here are the prefilter="none" contract
-    capped = DD.ngram_jaccard_pairs(
-        df, "doc_id", "text", "source", 0.5, max_block=10, prefilter="none"
-    ).collect()
-    # mega-block dropped entirely (same drop semantics as max_bucket);
-    # blocks under the cap are untouched
-    assert {(r.id_a, r.id_b) for r in capped} == {
-        (f"s{i}", f"s{j}") for i in range(4) for j in range(i + 1, 4)
-    }
-
-
 def test_lsh_prefilter_is_subset_and_exact(spark):
     df = _jaccard_corpus(spark, mega=8, small=4)
     default = DD.ngram_jaccard_pairs(df, "doc_id", "text", "source", 0.5, max_block=None)

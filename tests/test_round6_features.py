@@ -290,6 +290,7 @@ def test_incremental_base_prune_output_identical(spark):
     from datacurator_jl_spark.operators import dedup as DD
     from datacurator_jl_spark.operators.dedup import (
         _band_buckets,
+        _drop_over_cap,
         _materialize,
         _propagate_min_labels,
     )
@@ -335,9 +336,10 @@ def test_incremental_base_prune_output_identical(spark):
                 "doc", *[f"mh{i}" for i in range(k)], F.lit(False).alias("is_base")
             )
         )
-        buckets = _materialize(
-            _band_buckets(tagged, k, bands, max_bucket=max_bucket), "local"
-        )
+        buckets = _band_buckets(tagged, k, bands)
+        if max_bucket:
+            buckets = _drop_over_cap(buckets, ["band", "key"], max_bucket)
+        buckets = _materialize(buckets, "local")
         a, b = buckets.alias("a"), buckets.alias("b")
         pairs = (
             a.join(b, ["band", "key"])

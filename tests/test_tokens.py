@@ -465,6 +465,30 @@ def test_no_unused_module_imports():
     assert offenders == []
 
 
+def test_no_unread_local_assignments():
+    """A function never assigns a plain local name (``x = ...``) that it
+    never reads: the shape that let ``drop_contained_docs`` build a
+    capped join side and then join the uncapped one. Tuple unpacking,
+    ``for`` targets, ``global``/``nonlocal`` names and ``_``-prefixed
+    names are exempt; a read in a nested function counts."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text(), rel)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            nodes = list(ast.walk(fn))
+            read = {n.id for n in nodes if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+            read |= {x for n in nodes if isinstance(n, (ast.Global, ast.Nonlocal)) for x in n.names}
+            for n in nodes:
+                if (isinstance(n, ast.Assign) and len(n.targets) == 1
+                        and isinstance(n.targets[0], ast.Name)
+                        and not n.targets[0].id.startswith("_")
+                        and n.targets[0].id not in read):
+                    offenders.append((rel, n.lineno, fn.name, n.targets[0].id))
+    assert sorted(set(offenders)) == []
+
+
 def test_one_md5_definition():
     """``arrow_hash.md5_prefix`` is the package's only Python md5: no
     ``hashlib`` anywhere else (Spark ``F.md5`` Columns and DuckDB SQL
